@@ -2,13 +2,19 @@
 
 north_rule requirements implemented here:
 - every stage writes a parquet table (stand-in for an Iceberg table; the
-  write code is isolated behind ``_write``/``_read`` so swapping the format
-  to "iceberg" is a one-line change once the runtime has the catalog jars);
-- a manifest (JSON) records stage -> path + row count + wall time; restart
-  skips completed stages (resume-from-snapshot semantics);
-- a metrics table records per-stage counts, reduction ratio, and LSH
-  bucket-truncation counts;
-- a per-partition lineage table records (stage, partition_id, rows).
+  write code is isolated behind ``_write_stage``/``_read_stage`` so
+  swapping the format to "iceberg" is a config change once the runtime
+  has the catalog jars);
+- a manifest (JSON, replaced atomically) records stage -> path + row
+  count + wall time; restart skips completed stages
+  (resume-from-snapshot semantics);
+- a metrics table records one row per stage: counts, seconds and, for
+  the pair passes, LSH bucket-truncation counts;
+- a per-partition lineage table records (partition_id, rows, stage):
+  ``partition_id`` is the stage write's task partition, and the counts
+  come from the committed data files' footers (parquet) or the
+  committed snapshot's ``files`` metadata table (Iceberg) — the
+  bookkeeping runs no Spark job of its own beyond the stage write.
 
 Stage graph:
 
@@ -20,11 +26,14 @@ Stage graph:
 from __future__ import annotations
 
 import json
+import os
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,6 +88,16 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     )
 
 
+def _partition_rows(files) -> dict[int, int]:
+    """``{partition_id: rows}`` from ``(partition id field, row count)``
+    per committed data file; a partition may have written several
+    files."""
+    parts: dict[int, int] = {}
+    for pid, rows in files:
+        parts[int(pid)] = parts.get(int(pid), 0) + int(rows)
+    return parts
+
+
 class DedupPipeline:
     def __init__(
         self,
@@ -95,7 +114,7 @@ class DedupPipeline:
         self.remove_spans = remove_spans
         self.metrics: list[dict] = []
         self._manifest: dict = {}
-        # serializes manifest/lineage/metrics mutation when independent
+        # serializes manifest/metrics mutation when independent
         # stages run concurrently (run() overlaps the substring pass with
         # the candidates->verify chain, guide §2.6)
         self._lock = threading.Lock()
@@ -117,9 +136,15 @@ class DedupPipeline:
             self._manifest = {}
 
     def _save_manifest(self) -> None:
+        """Replace manifest.json atomically: serialize into a temp file,
+        then os.replace it, so a crash mid-write leaves the previous
+        manifest loadable instead of truncated JSON."""
         if self.work_dir:
             self.work_dir.mkdir(parents=True, exist_ok=True)
-            self._manifest_path.write_text(json.dumps(self._manifest, indent=2))
+            tmp = self._manifest_path.with_name("manifest.json.tmp")
+            with open(tmp, "w") as f:
+                json.dump(self._manifest, f, indent=2)
+            os.replace(tmp, self._manifest_path)
 
     # --- stage-table format seam (north_rule: Iceberg tables) -------------
     # The tested default in this runtime is parquet (no catalog jars are
@@ -130,19 +155,40 @@ class DedupPipeline:
     # directory that a concurrent writer could clobber). The swap is
     # confined to _write_stage/_read_stage.
     def _write_stage(self, spark: SparkSession, name: str, df: DataFrame):
-        """Materialize one stage table; returns (reader, location, snapshot_id)."""
+        """Materialize one stage table; returns (reader, location,
+        snapshot_id, {partition_id: rows}). The per-partition counts come
+        from what the commit wrote, so recording the stage needs no scan
+        of the table: parquet footers of the committed ``part-*`` files,
+        or ``record_count`` of the committed snapshot's data files."""
         if self.config.stage_format == "iceberg":
             ident = f"{self.config.iceberg_namespace}.{name}"
             df.writeTo(ident).createOrReplace()
-            snap = (
-                spark.sql(f"SELECT snapshot_id FROM {ident}.snapshots "
-                          "ORDER BY committed_at DESC LIMIT 1")
-                .collect()[0]["snapshot_id"]
+            # LEFT JOIN: an empty table has no data files but still has
+            # its snapshot id
+            rows = spark.sql(
+                f"SELECT s.snapshot_id, f.file_path, f.record_count FROM "
+                f"(SELECT snapshot_id FROM {ident}.snapshots "
+                f"ORDER BY committed_at DESC LIMIT 1) s "
+                f"LEFT JOIN {ident}.files f ON true"
+            ).collect()
+            # Iceberg data files are named <partition %05d>-<task>-...
+            parts = _partition_rows(
+                (os.path.basename(r["file_path"]).split("-")[0],
+                 r["record_count"])
+                for r in rows if r["file_path"] is not None
             )
-            return spark.read.table(ident), ident, int(snap)
-        path = str(self.work_dir / name)
+            return (spark.read.table(ident), ident,
+                    int(rows[0]["snapshot_id"]), parts)
+        stage_dir = self.work_dir / name
+        path = str(stage_dir)
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path), path, None
+        # Spark names committed files part-<partition %05d>-<uuid>-...
+        parts = _partition_rows(
+            (f.name.split("-")[1], pq.read_metadata(f).num_rows)
+            for f in stage_dir.glob("part-*")
+        )
+        # typed read-back: the schema is known, so no inference job
+        return spark.read.schema(df.schema).parquet(path), path, None, parts
 
     def _read_stage(self, spark: SparkSession, name: str) -> DataFrame:
         entry = self._manifest[name]
@@ -153,18 +199,23 @@ class DedupPipeline:
             return reader.table(entry["path"])
         return spark.read.parquet(entry["path"])
 
-    def _stage(self, spark: SparkSession, name: str, build) -> DataFrame:
+    def _stage(self, spark: SparkSession, name: str, build,
+               dropped_acc=None) -> DataFrame:
         """Run-or-resume one stage. With a work_dir, the stage materializes
         to a stage table (parquet default / Iceberg snapshot, see
         _write_stage) and restart reads it back; without one it
-        localCheckpoints (test mode)."""
+        localCheckpoints (test mode). ``dropped_acc`` is the pair
+        expander's dropped-bucket accumulator, folded into the stage's
+        metrics row once the stage has run (a resumed stage never ran
+        the expander, so it records nothing)."""
         if self.work_dir:
             if name in self._manifest:
                 return self._read_stage(spark, name)
             t0 = time.time()
-            df = build()
-            out, location, snap = self._write_stage(spark, name, df)
-            n = self._record(name, t0, out)
+            out, location, snap, parts = self._write_stage(spark, name, build())
+            self._write_lineage(name, parts)
+            n = sum(parts.values())
+            self._record(name, t0, n, dropped_acc)
             with self._lock:
                 self._manifest[name] = {
                     "path": location, "rows": n,
@@ -173,15 +224,14 @@ class DedupPipeline:
                 self._save_manifest()
             return out
         t0 = time.time()
-        # lazy pin: _record's count() is always the next action, so it
-        # materializes the checkpoint blocks AND returns the row count in
-        # ONE job — eager=True ran the identical subtree as a separate
-        # checkpoint job first, doubling the per-stage job count for no
-        # extra safety (the count touches every partition, so the blocks
-        # are fully materialized either way; accumulators still fire
-        # exactly once, in the counting job).
+        # lazy pin: the count() below materializes the checkpoint blocks
+        # AND returns the row count in ONE job — eager=True ran the
+        # identical subtree as a separate checkpoint job first, doubling
+        # the per-stage job count for no extra safety (the count touches
+        # every partition, so the blocks are fully materialized either
+        # way; accumulators still fire exactly once, in the counting job).
         df = pin(build())
-        self._record(name, t0, df)
+        self._record(name, t0, df.count(), dropped_acc)
         return df
 
     def _stage_rows(self, name: str) -> int | None:
@@ -190,42 +240,41 @@ class DedupPipeline:
         downstream decisions reuse the count instead of re-running a
         count job over the stage table."""
         for m in self.metrics:
-            if m.get("stage") == name and m.get("rows") is not None:
+            if m["stage"] == name:
                 return m["rows"]
         entry = self._manifest.get(name)
         if entry and entry.get("rows") is not None:
             return entry["rows"]
         return None
 
-    def _record(self, stage: str, t0: float, df: DataFrame) -> int:
-        """Record (metrics row, lineage table) for one stage; returns the
-        stage row count. ONE scan serves both the count and the
-        per-partition lineage — the previous shape (count() plus a
-        lineage groupBy) read every stage table twice (session-8 review
-        fix)."""
-        if self.work_dir:
-            spark = df.sparkSession
-            parts = df.groupBy(
-                F.spark_partition_id().alias("partition_id")
-            ).agg(F.count("*").alias("rows")).collect()
-            n = int(sum(r["rows"] for r in parts))
-            lineage = spark.createDataFrame(
-                [(int(r["partition_id"]), int(r["rows"])) for r in parts],
-                "partition_id int, rows long",
-            ).withColumn("stage", F.lit(stage))
-            # locked: concurrent stages (run() overlaps the substring
-            # pass) must not append to the shared _lineage path at the
-            # same time — two jobs sharing one _temporary dir can corrupt
-            # the commit
-            with self._lock:
-                lineage.write.mode("append").parquet(
-                    str(self.work_dir / "_lineage"))
-        else:
-            n = df.count()
-        self.metrics.append(
-            {"stage": stage, "rows": n, "secs": round(time.time() - t0, 3)}
+    def _write_lineage(self, stage: str, parts: dict[int, int]) -> None:
+        """Write the stage's lineage rows from the driver (no Spark job)
+        to ``_lineage/part-<stage>.parquet``, replacing any copy a
+        crashed earlier attempt left behind — so a resumed run holds
+        exactly one set of rows per stage. The temp name starts with a
+        dot, which Spark's file listing skips."""
+        lineage_dir = self.work_dir / "_lineage"
+        lineage_dir.mkdir(parents=True, exist_ok=True)
+        ids = sorted(parts)
+        table = pa.table(
+            {
+                "partition_id": pa.array(ids, pa.int32()),
+                "rows": pa.array([parts[i] for i in ids], pa.int64()),
+                "stage": pa.array([stage] * len(ids), pa.string()),
+            }
         )
-        return n
+        tmp = lineage_dir / f".part-{stage}.parquet.tmp"
+        pq.write_table(table, tmp)
+        os.replace(tmp, lineage_dir / f"part-{stage}.parquet")
+
+    def _record(self, stage: str, t0: float, n: int, dropped_acc=None) -> None:
+        """Append the stage's ONE metrics row. Locked: run() records the
+        substring stage from its worker thread."""
+        row = {"stage": stage, "rows": n, "secs": round(time.time() - t0, 3)}
+        if dropped_acc is not None:
+            row["dropped_buckets"] = dropped_acc.value
+        with self._lock:
+            self.metrics.append(row)
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
         """The run's per-stage metrics (rows, seconds, dropped-bucket
@@ -316,11 +365,10 @@ class DedupPipeline:
         # CONCURRENTLY with the candidates -> verify chain (guide §2.6:
         # overlap independent jobs so one job's tasks back-fill executors
         # left idle by the other's stragglers / fixed per-job overhead).
-        # _stage serializes manifest/lineage/metrics mutation behind
+        # _stage serializes manifest/metrics mutation behind
         # self._lock; the Spark scheduler interleaves the two jobs' tasks.
         sub_future = None
         sub_executor = None
-        sub_ran = False
         if self.use_substring_pass:
             sub_dropped = spark.sparkContext.accumulator(0)
 
@@ -331,15 +379,15 @@ class DedupPipeline:
                     dropped_acc=sub_dropped,
                 ).withColumn("jaccard", F.lit(None).cast("double"))
 
-            sub_ran = not (self.work_dir and "substring_pairs" in self._manifest)
             sub_executor = ThreadPoolExecutor(max_workers=1)
             sub_future = sub_executor.submit(
-                self._stage, spark, "substring_pairs", build_sub_pairs
+                self._stage, spark, "substring_pairs", build_sub_pairs,
+                sub_dropped,
             )
 
         # dropped-bucket accumulators: the streaming pair expander drops
-        # buckets over the cap; the counts land in the metrics list so
-        # skew/truncation stays observable (north_rule)
+        # buckets over the cap; the counts land in the stage's metrics
+        # row so skew/truncation stays observable (north_rule)
         cand_dropped = spark.sparkContext.accumulator(0)
 
         def build_candidates() -> DataFrame:
@@ -348,17 +396,13 @@ class DedupPipeline:
                 id_type, dropped_acc=cand_dropped,
             )
 
-        ran = not (self.work_dir and "candidates" in self._manifest)
         try:
-            candidates = self._stage(spark, "candidates", build_candidates)
+            candidates = self._stage(
+                spark, "candidates", build_candidates, cand_dropped)
         except BaseException:
             if sub_executor is not None:  # don't leak the worker thread
                 sub_executor.shutdown(wait=True)
             raise
-        if ran:  # resumed stages never ran the expander -> no drop count
-            self.metrics.append(
-                {"stage": "candidates", "dropped_buckets": cand_dropped.value}
-            )
 
         # Boilerplate-clique pressure valve (opt-in): cap each doc's
         # verified-pair degree before the quadratic shingle gather; the
@@ -366,11 +410,6 @@ class DedupPipeline:
         # has the connectivity argument + measurements). Its own
         # checkpointed stage so resume skips the double window shuffle.
         try:
-            # Boilerplate-clique pressure valve (opt-in): cap each doc's
-            # verified-pair degree before the quadratic shingle gather; the
-            # cluster output is unchanged (minhash.cap_pair_degree docstring
-            # has the connectivity argument + measurements). Its own
-            # checkpointed stage so resume skips the double window shuffle.
             to_verify = candidates
             if cfg.max_verify_degree is not None:
                 from recordlinkage_spark.minhash import cap_pair_degree
@@ -414,10 +453,6 @@ class DedupPipeline:
                 sub_pairs = sub_future.result()
             finally:
                 sub_executor.shutdown(wait=True)
-            if sub_ran:
-                self.metrics.append(
-                    {"stage": "substring_pairs", "dropped_buckets": sub_dropped.value}
-                )
             # merge the two pass outputs per pair with max(jaccard), NOT
             # dropDuplicates: a pair found by both passes has one row with
             # the verified jaccard and one with null, and dropDuplicates
@@ -604,7 +639,6 @@ class DedupPipeline:
         # (signatures, store_sigs)
         sub_future = None
         sub_executor = None
-        sub_ran = False
         if self.use_substring_pass:
             sub_dropped = spark.sparkContext.accumulator(0)
 
@@ -618,22 +652,15 @@ class DedupPipeline:
                     dropped_acc=sub_dropped,
                 ).withColumn("jaccard", F.lit(None).cast("double"))
 
-            sub_ran = not (
-                self.work_dir and "inc_substring_pairs" in self._manifest
-            )
             sub_executor = ThreadPoolExecutor(max_workers=1)
             sub_future = sub_executor.submit(
-                self._stage, spark, "inc_substring_pairs", build_sub_pairs
+                self._stage, spark, "inc_substring_pairs", build_sub_pairs,
+                sub_dropped,
             )
 
-        ran = not (self.work_dir and "inc_candidates" in self._manifest)
         try:
-            candidates = self._stage(spark, "inc_candidates", build_candidates)
-            if ran:
-                self.metrics.append(
-                    {"stage": "inc_candidates",
-                     "dropped_buckets": cand_dropped.value}
-                )
+            candidates = self._stage(
+                spark, "inc_candidates", build_candidates, cand_dropped)
 
             # same boilerplate-clique valve as run(): a snapshot whose docs
             # share a header with the store forms a true new-vs-store
@@ -676,11 +703,6 @@ class DedupPipeline:
                 sub_pairs = sub_future.result()
             finally:
                 sub_executor.shutdown(wait=True)
-            if sub_ran:
-                self.metrics.append(
-                    {"stage": "inc_substring_pairs",
-                     "dropped_buckets": sub_dropped.value}
-                )
             # same deterministic max(jaccard) merge as run() — see the
             # matches stage comment there
             matches = self._stage(

@@ -44,10 +44,11 @@ def main() -> None:
     from recordlinkage_spark import ann
     from recordlinkage_spark.semdedup import semantic_dedup
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    slots = cpus if cpus <= 16 else cpus // 2
-    spark = get_spark("capture-plans", master=f"local[{slots}]",
-                      shuffle_partitions=max(2 * slots, 16))
+    # get_spark picks the master (its slot rule); size the shuffle from
+    # the slots it chose
+    spark = get_spark("capture-plans")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(2 * spark.sparkContext.defaultParallelism, 16)))
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
