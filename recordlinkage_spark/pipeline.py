@@ -6,10 +6,10 @@ north_rule requirements implemented here:
   swapping the format to "iceberg" is a config change once the runtime
   has the catalog jars);
 - a manifest (JSON, replaced atomically) records stage -> path + row
-  count + wall time; restart skips completed stages
+  count + committed bytes; restart skips completed stages
   (resume-from-snapshot semantics);
-- a metrics table records one row per stage: counts, seconds and, for
-  the pair passes, LSH bucket-truncation counts;
+- a metrics table records one row per stage: counts, seconds, committed
+  bytes and, for the pair passes, LSH bucket-truncation counts;
 - a per-partition lineage table records (partition_id, rows, stage):
   ``partition_id`` is the stage write's task partition, and the counts
   come from the committed data files' footers (parquet) or the
@@ -156,17 +156,20 @@ class DedupPipeline:
     # confined to _write_stage/_read_stage.
     def _write_stage(self, spark: SparkSession, name: str, df: DataFrame):
         """Materialize one stage table; returns (reader, location,
-        snapshot_id, {partition_id: rows}). The per-partition counts come
-        from what the commit wrote, so recording the stage needs no scan
-        of the table: parquet footers of the committed ``part-*`` files,
-        or ``record_count`` of the committed snapshot's data files."""
+        snapshot_id, {partition_id: rows}, bytes). The per-partition
+        counts and the byte total come from what the commit wrote, so
+        recording the stage needs no scan of the table: parquet footers
+        and sizes of the committed ``part-*`` files, or ``record_count``
+        and ``file_size_in_bytes`` of the committed snapshot's data
+        files."""
         if self.config.stage_format == "iceberg":
             ident = f"{self.config.iceberg_namespace}.{name}"
             df.writeTo(ident).createOrReplace()
             # LEFT JOIN: an empty table has no data files but still has
             # its snapshot id
             rows = spark.sql(
-                f"SELECT s.snapshot_id, f.file_path, f.record_count FROM "
+                f"SELECT s.snapshot_id, f.file_path, f.record_count, "
+                f"f.file_size_in_bytes FROM "
                 f"(SELECT snapshot_id FROM {ident}.snapshots "
                 f"ORDER BY committed_at DESC LIMIT 1) s "
                 f"LEFT JOIN {ident}.files f ON true"
@@ -177,18 +180,23 @@ class DedupPipeline:
                  r["record_count"])
                 for r in rows if r["file_path"] is not None
             )
+            nbytes = sum(r["file_size_in_bytes"] for r in rows
+                         if r["file_path"] is not None)
             return (spark.read.table(ident), ident,
-                    int(rows[0]["snapshot_id"]), parts)
+                    int(rows[0]["snapshot_id"]), parts, nbytes)
         stage_dir = self.work_dir / name
         path = str(stage_dir)
         df.write.mode("overwrite").parquet(path)
         # Spark names committed files part-<partition %05d>-<uuid>-...
+        files = list(stage_dir.glob("part-*"))
         parts = _partition_rows(
             (f.name.split("-")[1], pq.read_metadata(f).num_rows)
-            for f in stage_dir.glob("part-*")
+            for f in files
         )
+        nbytes = sum(f.stat().st_size for f in files)
         # typed read-back: the schema is known, so no inference job
-        return spark.read.schema(df.schema).parquet(path), path, None, parts
+        return (spark.read.schema(df.schema).parquet(path), path, None,
+                parts, nbytes)
 
     def _read_stage(self, spark: SparkSession, name: str) -> DataFrame:
         entry = self._manifest[name]
@@ -212,13 +220,14 @@ class DedupPipeline:
             if name in self._manifest:
                 return self._read_stage(spark, name)
             t0 = time.time()
-            out, location, snap, parts = self._write_stage(spark, name, build())
+            out, location, snap, parts, nbytes = self._write_stage(
+                spark, name, build())
             self._write_lineage(name, parts)
             n = sum(parts.values())
-            self._record(name, t0, n, dropped_acc)
+            self._record(name, t0, n, dropped_acc, nbytes)
             with self._lock:
                 self._manifest[name] = {
-                    "path": location, "rows": n,
+                    "path": location, "rows": n, "bytes": nbytes,
                     "format": self.config.stage_format, "snapshot_id": snap,
                 }
                 self._save_manifest()
@@ -233,19 +242,6 @@ class DedupPipeline:
         df = pin(build())
         self._record(name, t0, df.count(), dropped_acc)
         return df
-
-    def _stage_rows(self, name: str) -> int | None:
-        """Row count a completed stage already recorded (metrics row for
-        a stage run this call; manifest entry for a resumed one) — lets
-        downstream decisions reuse the count instead of re-running a
-        count job over the stage table."""
-        for m in self.metrics:
-            if m["stage"] == name:
-                return m["rows"]
-        entry = self._manifest.get(name)
-        if entry and entry.get("rows") is not None:
-            return entry["rows"]
-        return None
 
     def _write_lineage(self, stage: str, parts: dict[int, int]) -> None:
         """Write the stage's lineage rows from the driver (no Spark job)
@@ -267,10 +263,13 @@ class DedupPipeline:
         pq.write_table(table, tmp)
         os.replace(tmp, lineage_dir / f"part-{stage}.parquet")
 
-    def _record(self, stage: str, t0: float, n: int, dropped_acc=None) -> None:
-        """Append the stage's ONE metrics row. Locked: run() records the
-        substring stage from its worker thread."""
-        row = {"stage": stage, "rows": n, "secs": round(time.time() - t0, 3)}
+    def _record(self, stage: str, t0: float, n: int, dropped_acc=None,
+                nbytes: int | None = None) -> None:
+        """Append the stage's ONE metrics row; ``nbytes`` is the stage
+        table's committed size (None without a work_dir). Locked: run()
+        records the substring stage from its worker thread."""
+        row = {"stage": stage, "rows": n, "secs": round(time.time() - t0, 3),
+               "bytes": nbytes}
         if dropped_acc is not None:
             row["dropped_buckets"] = dropped_acc.value
         with self._lock:
@@ -278,20 +277,23 @@ class DedupPipeline:
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
         """The run's per-stage metrics (rows, seconds, dropped-bucket
-        counts) as ONE tidy DataFrame — the queryable surface for the
-        north_rule's metrics-table requirement (r3; previously the list
-        had to be picked apart by hand)."""
+        counts, committed stage-table bytes) as ONE tidy DataFrame — the
+        queryable surface for the north_rule's metrics-table requirement
+        (r3; previously the list had to be picked apart by hand)."""
         rows = [
             (
                 m.get("stage"),
                 m.get("rows"),
                 m.get("secs"),
                 m.get("dropped_buckets"),
+                m.get("bytes"),
             )
             for m in self.metrics
         ]
         return spark.createDataFrame(
-            rows, "stage string, rows long, secs double, dropped_buckets long"
+            rows,
+            "stage string, rows long, secs double, dropped_buckets long, "
+            "bytes long",
         )
 
     # --- the pipeline ---------------------------------------------------------
@@ -420,23 +422,13 @@ class DedupPipeline:
                 )
 
             # verify the LSH candidates with exact Jaccard on shingle-hash
-            # sets (JVM array_intersect/union), threshold filter. The pair
-            # stage already counted itself (_record / manifest), so reuse
-            # that count for the broadcast decision instead of running a
-            # count job over the stage table (r6).
-            cand_stage = (
-                "candidates_capped" if cfg.max_verify_degree is not None
-                else "candidates"
-            )
-            n_cand = self._stage_rows(cand_stage)
-            if n_cand is None:  # defensive: fall back to a count job
-                n_cand = to_verify.count()
+            # sets (JVM array_intersect/union), threshold filter; the
+            # gather shape follows the stage tables' size estimates
             verified = self._stage(
                 spark, "verified",
                 lambda: exact_jaccard(
                     sh=signatures.select("id", F.col("sh").alias("_sh")),
                     cands=to_verify, threshold=self.jaccard_threshold,
-                    broadcast_pairs=n_cand <= 2_000_000,
                 ),
             )
         except BaseException:
@@ -677,20 +669,11 @@ class DedupPipeline:
             sh_all = signatures.select(
                 "id", F.col("sh").alias("_sh")
             ).unionByName(store_sigs.select("id", F.col("sh").alias("_sh")))
-            # reuse the pair stage's own count (see run(); r6)
-            cand_stage = (
-                "inc_candidates_capped" if cfg.max_verify_degree is not None
-                else "inc_candidates"
-            )
-            n_cand = self._stage_rows(cand_stage)
-            if n_cand is None:
-                n_cand = to_verify.count()
             verified = self._stage(
                 spark, "inc_verified",
                 lambda: exact_jaccard(
                     sh=sh_all, cands=to_verify,
                     threshold=self.jaccard_threshold,
-                    broadcast_pairs=n_cand <= 2_000_000,
                 ),
             )
         except BaseException:

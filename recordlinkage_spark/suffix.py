@@ -128,7 +128,15 @@ def winnow_fingerprints_np(flat: np.ndarray, lengths: np.ndarray,
         vals = flat_roll[np.repeat(roll_starts[short], Ls) + r]
         out[out_starts[short]] = np.minimum.reduceat(vals, seg_starts)
 
-    return textfns.distinct_per_doc_np(out, sel_counts)
+    # a window minimum usually stays the minimum of the next frames too:
+    # drop each run of equal selections before the per-doc distinct,
+    # which then sorts a fraction of the frames
+    keep = np.ones(len(out), dtype=bool)
+    keep[1:] = out[1:] != out[:-1]
+    keep[out_starts[sel_counts > 0]] = True  # a run never spans two docs
+    kept = np.concatenate(([0], np.cumsum(keep)))
+    return textfns.distinct_per_doc_np(out[keep],
+                                       kept[out_ends] - kept[out_starts])
 
 
 def winnow_fingerprint_positions_np(flat: np.ndarray, lengths: np.ndarray,

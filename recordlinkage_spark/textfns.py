@@ -33,41 +33,69 @@ from recordlinkage_spark.caching import pin
 
 _U13, _U51 = np.uint64(13), np.uint64(51)
 
-# Spread threshold for under-partitioned inputs feeding the Arrow
-# kernels: below this optimizer-estimated size, a repartition costs more
-# than it buys (r6 measurement: the exchange plus per-task Python
-# handshakes add ~0.15-0.25 s wall, while the kernels chew low-MB inputs
-# in well under that on one core). Estimated sizes are compressed/layout
-# bytes, so the default is deliberately small; unknown sizes (stats
-# Long.Max) always spread — the scale-safe default. Env-overridable for
-# deployments whose kernel-per-byte profile differs.
-SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_BYTES", 4 << 20))
+
+def plan_size_bytes(df) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, read from the
+    optimized logical plan (driver-side, runs no job); None when the plan
+    has no estimate (stats Long.Max or unavailable)."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+    return size if 0 <= size < 2**63 - 1 else None
+
+
+def advisory_partition_bytes(spark) -> int:
+    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes: the
+    partition size AQE coalesces shuffles toward."""
+    return spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
 
 
 def spread_small_input(df, min_bytes: int | None = None):
-    """Repartition an under-partitioned DataFrame to the cluster's
-    default parallelism UNLESS the optimizer's size estimate says the
-    input is too small for the exchange to pay off.
+    """Shape a DataFrame feeding the vectorized text kernels (MinHash /
+    SimHash / winnowing signature UDFs) to whole waves of Python tasks,
+    using the optimizer's size estimate (optimized logical plan:
+    driver-side, no job). Three cases, by partition count ``n`` against
+    the cluster's default parallelism ``dp``:
 
-    The vectorized text kernels (MinHash/SimHash/winnowing signature
-    UDFs) are fed by this: a one-file scan or small cached table arrives
-    as a single partition, which at real size would serialize the whole
-    pass on one task — but at toy size the round-robin exchange plus N
-    parallel Python-worker handshakes cost MORE than the single-task
-    kernel (measured r6, guide §1.2: shape the job to the data). The
-    size estimate comes from the optimized logical plan (driver-side, no
-    job); unknown estimates spread, so the failure mode of a missing
-    statistic is extra parallelism, never a serialized pass."""
-    sc = df.sparkSession.sparkContext
-    dp = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= dp:
+    - ``n < dp``: repartition to ``dp`` UNLESS the estimate is at most
+      ``min_bytes`` (default: ``SPARK_GRAFT_SPREAD_BYTES``, else 4 MB;
+      read on every call, so a driver may set it after importing this
+      module). A one-file scan or small cached table arrives as a single
+      partition, which at real size would serialize the whole pass on
+      one task — but at toy size the round-robin exchange plus ``dp``
+      Python-worker handshakes cost MORE than the single-task kernel
+      (measured in round 6: shape the job to the data). Unknown
+      estimates (stats Long.Max) spread, so a missing statistic costs
+      extra parallelism, never a serialized pass.
+    - ``n > dp`` and the estimate fits one advisory partition
+      (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) per slot:
+      coalesce, without a shuffle, to ``dp`` partitions — one whole
+      wave. Every Python task pays a fixed cost before its first row:
+      pyspark's reused worker calls ``importlib.invalidate_caches()``
+      before each task (``worker_util.setup_spark_files``), which
+      re-reads ``pyspark.zip``'s directory once per zip importer. A
+      trivial pandas UDF over 2000 cached rows on ``local[4]`` (4-vCPU
+      VM) took 0.36 / 0.41-0.49 / 0.78-0.88 / 1.37-1.60 s at 1 / 4 / 8
+      / 16 partitions: each extra wave adds ~0.4 s, and a partial wave
+      costs as much as a full one.
+    - otherwise the input is returned as is.
+    """
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    n = df.rdd.getNumPartitions()
+    if n == dp:
         return df
-    limit = SPREAD_MIN_BYTES if min_bytes is None else min_bytes
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable -> spread (scale-safe)
-        size = None
-    if size is not None and 0 <= size <= limit:
+    size = plan_size_bytes(df)
+    if n > dp:
+        fits = (size is not None
+                and size <= dp * advisory_partition_bytes(df.sparkSession))
+        return df.coalesce(dp) if fits else df
+    # estimates are compressed/layout bytes, so the default is small
+    limit = (int(os.environ.get("SPARK_GRAFT_SPREAD_BYTES", 4 << 20))
+             if min_bytes is None else min_bytes)
+    if size is not None and size <= limit:
         return df
     return df.repartition(dp)
 
@@ -296,9 +324,23 @@ def gram_hashes_np(flat: np.ndarray, lengths: np.ndarray, n: int):
 
 def distinct_per_doc_np(vals: np.ndarray, counts: np.ndarray):
     """Per-doc distinct of a flat segmented array. Returns (vals, counts)
-    with each doc's segment sorted + deduped (one lexsort, no per-doc
-    loop)."""
+    with each doc's segment sorted + deduped (no per-doc loop).
+
+    Unsigned values of at most 32 bits (the verify shingle set) pack with
+    their doc index into one uint64 key and sort once, instead of the
+    two-key lexsort wider values take."""
     ndocs = len(counts)
+    if vals.dtype.kind == "u" and vals.dtype.itemsize <= 4:
+        key = np.repeat(np.arange(ndocs, dtype=np.uint64) << np.uint64(32),
+                        counts)
+        key |= vals
+        key.sort()
+        keep = np.ones(len(key), dtype=bool)
+        keep[1:] = key[1:] != key[:-1]
+        key = key[keep]
+        new_counts = np.bincount((key >> np.uint64(32)).astype(np.int64),
+                                 minlength=ndocs)
+        return key.astype(vals.dtype), new_counts.astype(np.int64)
     doc = np.repeat(np.arange(ndocs, dtype=np.int64), counts)
     order = np.lexsort((vals, doc))
     sv, sd = vals[order], doc[order]

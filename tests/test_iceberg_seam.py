@@ -5,7 +5,7 @@ the ENGINE's side of the contract (VERDICT r2 "Next round" #4):
 
 - a stage write goes through ``df.writeTo(<ns>.<stage>).createOrReplace()``
   and the committed snapshot id is captured into the manifest,
-- the stage's row counts come from that snapshot's data files,
+- the stage's row counts and bytes come from that snapshot's data files,
 - the manifest records ``format`` and ``snapshot_id`` per stage,
 - resume reads back through ``spark.read.option("snapshot-id", ...)``
   so a restart pins the immutable snapshot, not "latest".
@@ -18,15 +18,16 @@ from recordlinkage_spark.config import EngineConfig
 from recordlinkage_spark.pipeline import DedupPipeline
 
 
-def _fake_spark(snapshot_id=77, rows=123):
+def _fake_spark(snapshot_id=77, rows=123, size=4096):
     spark = mock.MagicMock(name="spark")
     # _write_stage reads the committed snapshot id and its data files'
-    # record counts in ONE query over the snapshots + files metadata
-    # tables; Iceberg names data files <partition %05d>-<task>-<uuid>-...
+    # record counts and sizes in ONE query over the snapshots + files
+    # metadata tables; Iceberg names data files
+    # <partition %05d>-<task>-<uuid>-...
     spark.sql.return_value.collect.return_value = [
         {"snapshot_id": snapshot_id,
          "file_path": "/wh/dedup_ns/t/data/00000-0-0f1e-00001.parquet",
-         "record_count": rows},
+         "record_count": rows, "file_size_in_bytes": size},
     ]
     return spark
 
@@ -39,7 +40,8 @@ def test_write_stage_uses_writeto_and_captures_snapshot(tmp_path):
     pipe = DedupPipeline(_cfg(), work_dir=tmp_path)
     spark = _fake_spark(snapshot_id=9001)
     df = mock.MagicMock(name="df")
-    out, location, snap, parts = pipe._write_stage(spark, "signatures", df)
+    out, location, snap, parts, nbytes = pipe._write_stage(
+        spark, "signatures", df)
     df.writeTo.assert_called_once_with("dedup_ns.signatures")
     df.writeTo.return_value.createOrReplace.assert_called_once_with()
     assert location == "dedup_ns.signatures"
@@ -51,11 +53,13 @@ def test_write_stage_uses_writeto_and_captures_snapshot(tmp_path):
     assert out is spark.read.table.return_value
     # per-partition counts come from the committed data files
     assert parts == {0: 123}
+    assert nbytes == 4096
+    assert "file_size_in_bytes" in sql
 
 
 def test_stage_manifest_records_format_and_snapshot(tmp_path):
     pipe = DedupPipeline(_cfg(), work_dir=tmp_path)
-    fake = _fake_spark(snapshot_id=42, rows=7)
+    fake = _fake_spark(snapshot_id=42, rows=7, size=300)
     df = mock.MagicMock(name="df")
     pipe._stage(fake, "candidates", lambda: df)
     manifest = json.loads((tmp_path / "manifest.json").read_text())
@@ -64,6 +68,7 @@ def test_stage_manifest_records_format_and_snapshot(tmp_path):
     assert entry["snapshot_id"] == 42
     assert entry["path"] == "dedup_ns.candidates"
     assert entry["rows"] == 7
+    assert entry["bytes"] == 300
 
 
 def test_resume_pins_snapshot_id_option(tmp_path):
@@ -99,24 +104,29 @@ def test_parquet_default_has_no_snapshot(tmp_path, spark):
 
 
 def test_counts_from_snapshot_data_files(tmp_path):
-    """Row counts per write partition come from the committed snapshot's
-    data files (several files may share a partition); an empty table has
-    no data files but still records its snapshot and 0 rows."""
+    """Row counts per write partition and the byte total come from the
+    committed snapshot's data files (several files may share a
+    partition); an empty table has no data files but still records its
+    snapshot, 0 rows and 0 bytes."""
     pipe = DedupPipeline(_cfg(), work_dir=tmp_path)
     spark = mock.MagicMock(name="spark")
     spark.sql.return_value.collect.return_value = [
         {"snapshot_id": 5, "file_path": f"/wh/d/{name}.parquet",
-         "record_count": n}
+         "record_count": n, "file_size_in_bytes": 100 * n}
         for name, n in [("00000-3-ab-00001", 4), ("00000-3-ab-00002", 6),
                         ("00002-5-ab-00001", 1)]
     ]
-    _, _, snap, parts = pipe._write_stage(spark, "pairs", mock.MagicMock())
+    _, _, snap, parts, nbytes = pipe._write_stage(
+        spark, "pairs", mock.MagicMock())
     assert (snap, parts) == (5, {0: 10, 2: 1})
+    assert nbytes == 1100
 
     spark.sql.return_value.collect.return_value = [
-        {"snapshot_id": 6, "file_path": None, "record_count": None}
+        {"snapshot_id": 6, "file_path": None, "record_count": None,
+         "file_size_in_bytes": None}
     ]
     pipe._stage(spark, "empty", lambda: mock.MagicMock(name="df"))
     manifest = json.loads((tmp_path / "manifest.json").read_text())
     assert manifest["empty"]["rows"] == 0
     assert manifest["empty"]["snapshot_id"] == 6
+    assert manifest["empty"]["bytes"] == 0

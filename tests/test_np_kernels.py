@@ -120,6 +120,97 @@ def test_distinct_per_doc_np(rng):
         pos += c
 
 
+def test_distinct_per_doc_np_packed_uint32(rng):
+    """Unsigned 32-bit values take the packed single-sort path: it must
+    match np.unique per doc, keep the input dtype, and handle empty
+    docs, all-equal docs and the extreme values 0 and 2^32-1."""
+    top = np.uint32(2**32 - 1)
+    docs = [rng.randint(0, 2**32, rng.randint(0, 40), dtype=np.uint64)
+            .astype(np.uint32) for _ in range(60)]
+    docs += [np.empty(0, np.uint32), np.full(17, 5, np.uint32),
+             np.array([top, 0, top, 0, 1], np.uint32), np.full(3, top),
+             np.empty(0, np.uint32)]
+    docs = [d.astype(np.uint32) for d in docs]
+    rng.shuffle(docs)
+    flat = np.concatenate(docs)
+    counts = np.array([len(d) for d in docs], dtype=np.int64)
+    vals, new_counts = textfns.distinct_per_doc_np(flat, counts)
+    assert vals.dtype == np.uint32
+    assert len(new_counts) == len(docs)
+    pos = 0
+    for d, c in zip(docs, new_counts):
+        assert np.array_equal(vals[pos:pos + c], np.unique(d))
+        pos += c
+    assert pos == len(vals)
+    # zero docs
+    vals, new_counts = textfns.distinct_per_doc_np(
+        np.empty(0, np.uint32), np.empty(0, np.int64))
+    assert len(vals) == 0 and len(new_counts) == 0
+
+
+def test_winnow_np_long_runs_of_equal_minima(rng):
+    """Docs whose window minimum repeats over long runs (few distinct
+    tokens, constant docs, a long doc with a planted tiny minimum) —
+    the kernel drops those runs before its distinct."""
+    span, window = 4, 9
+    docs = [rng.randint(0, 3, rng.randint(0, 120)).astype(np.uint64)
+            for _ in range(60)]
+    docs += [np.full(200, 7, np.uint64), np.full(span, 7, np.uint64)]
+    long_doc = rng.randint(0, 2**63, 300, dtype=np.int64).view(np.uint64)
+    docs += [long_doc, np.concatenate([long_doc[:100], long_doc[:100]])]
+    flat = np.concatenate(docs)
+    lengths = np.array([len(d) for d in docs], dtype=np.int64)
+    vals, counts = winnow_fingerprints_np(flat, lengths, span, window)
+    pos = 0
+    for d, c in zip(docs, counts):
+        expect = naive_winnow(d, span, window)
+        got = vals[pos:pos + c]
+        if expect is None:
+            assert c == 0
+        else:
+            assert np.array_equal(got, expect)
+        pos += c
+    assert pos == len(vals)
+
+
+def _signature_corpus():
+    """500 seeded docs: nulls, empty and whitespace-only text, 1-3 token
+    docs, one-token-repeated docs and 5-400 token docs."""
+    rng = np.random.RandomState(20261017)
+    vocab = [f"w{i}" for i in range(300)]
+    texts = []
+    for i in range(500):
+        k = i % 10
+        if k == 0:
+            texts.append(None)
+        elif k == 1:
+            texts.append("" if i % 20 == 1 else "   ")
+        elif k == 2:
+            texts.append(" ".join(rng.choice(vocab, rng.randint(1, 4))))
+        elif k == 3:
+            texts.append(" ".join(["same"] * rng.randint(20, 80)))
+        else:
+            texts.append(" ".join(rng.choice(vocab, rng.randint(5, 400))))
+    return pd.Series(texts, dtype=object)
+
+
+def test_signature_udf_digest_pinned(spark):
+    """The signature kernel's (bands, fps, sh) over a seeded batch hash to
+    a pinned digest: kernel rewrites must stay bit-identical."""
+    import hashlib
+
+    from recordlinkage_spark.minhash import make_signature_udf
+
+    out = make_signature_udf(128, 32, 4, 3, 16, 9).func(_signature_corpus())
+    h = hashlib.sha256()
+    for col in ("bands", "fps", "sh"):
+        for v in out[col]:
+            h.update(b"N" if v is None else np.asarray(v).tobytes() + b"|")
+    assert h.hexdigest() == (
+        "1e1b69769c3f634a36d7fe3d6581cafcec4a3d833087a3864b954934bc31c8d2"
+    )
+
+
 def test_flat_token_hashes_null_and_empty():
     s = pd.Series(["a b c", None, "", "  ", "a a"])
     flat, lengths, isna = textfns.flat_token_hashes_np(s)

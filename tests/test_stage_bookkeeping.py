@@ -9,6 +9,7 @@ that the bookkeeping adds no Spark job beyond the stage write.
 """
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -97,6 +98,19 @@ def test_metrics_one_row_per_stage_with_dropped_buckets(spark, finished_run):
     assert {r["stage"] for r in rows if r["dropped_buckets"] is not None} == {
         "candidates", "substring_pairs"
     }
+
+
+def test_stage_bytes_are_part_file_sizes(spark, finished_run):
+    """Each stage's ``bytes`` (manifest entry and metrics row) is the sum
+    of its committed part-file sizes."""
+    pipe, wd = finished_run
+    rows = pipe.metrics_df(spark)
+    assert rows.schema["bytes"].dataType.simpleString() == "bigint"
+    metrics = {r["stage"]: r["bytes"] for r in rows.collect()}
+    for stage, entry in _manifest(wd).items():
+        size = sum(f.stat().st_size for f in Path(entry["path"]).glob("part-*"))
+        assert size > 0, stage
+        assert entry["bytes"] == size == metrics[stage], stage
 
 
 def test_resume_after_crash_keeps_one_lineage_set(spark, capped_docs, tmp_path):
