@@ -624,20 +624,25 @@ def pairs_against_bands(
     return within.unionByName(cross).dropDuplicates(["id_1", "id_2"])
 
 
-# The pair list broadcasts into the verify gather up to 2M pairs of two
-# 8-byte ids, as estimated by the optimizer.
-_PAIR_BROADCAST_BYTES = 2_000_000 * 16
+# The pair list broadcasts into the verify gather up to this many pairs.
+_PAIR_BROADCAST_ROWS = 2_000_000
 
 
-def _broadcast_gather(cands: DataFrame, sh: DataFrame) -> bool:
-    """The verify gather rule of :func:`exact_jaccard`, decided from the
-    optimized plans' size estimates alone (runs no job)."""
+def _broadcast_gather(cands: DataFrame, sh: DataFrame,
+                      n_pairs: int | None = None) -> bool:
+    """The verify gather rule of :func:`exact_jaccard`. The shingle
+    table's size estimate comes from its optimized plan (no job); the
+    pair count is ``n_pairs`` when given, else a count job over
+    ``cands``, run only when the shingle table is too big for Spark to
+    broadcast by itself."""
+    auto = (sh.sparkSession._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold())
     sh_bytes = textfns.plan_size_bytes(sh)
-    if (sh_bytes is not None
-            and sh_bytes <= textfns.advisory_partition_bytes(sh.sparkSession)):
+    if sh_bytes is not None and sh_bytes <= auto:
         return False
-    pair_bytes = textfns.plan_size_bytes(cands.select("id_1", "id_2"))
-    return pair_bytes is not None and pair_bytes <= _PAIR_BROADCAST_BYTES
+    if n_pairs is None:
+        n_pairs = cands.count()
+    return n_pairs <= _PAIR_BROADCAST_ROWS
 
 
 def exact_jaccard(
@@ -645,6 +650,7 @@ def exact_jaccard(
     sh: DataFrame,
     threshold: float,
     broadcast_pairs: bool | None = None,
+    n_pairs: int | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs against a shingle
     table ``sh(id, _sh array<bigint>)``. Returns (id_1, id_2, jaccard)
@@ -658,19 +664,23 @@ def exact_jaccard(
     key, moving only arrays of ids that actually occur in pairs
     (measured 2x on the verify stage at 32 threads, where shuffling all
     arrays saturates memory bandwidth). The SHUFFLED gather is two plain
-    joins, which AQE turns into broadcast joins at run time when a side
-    turns out small. The rule: broadcast only when the shingle table's
-    size estimate is above one advisory partition
-    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) or unknown AND
-    the pair list's estimate is at most 2M pairs (32 MB); otherwise
-    shuffle. Below one advisory partition the two broadcasts cost more
-    than they save: at 550 pairs x 2120 docs on a 4-vCPU VM (8 runs
-    each) the broadcast gather took a median 0.82 s in 5 jobs, the
-    shuffled one 0.54 s in 3 jobs. Both estimates come from the
-    optimized plans, so the choice runs no job. Pass ``broadcast_pairs``
-    explicitly to force one shape."""
+    joins. The rule: when the shingle table's size estimate is at most
+    ``spark.sql.autoBroadcastJoinThreshold``, each plain join has a
+    side Spark broadcasts by itself (``sh``, or the smaller pair list),
+    so the shuffled gather exchanges no array column either and skips
+    the broadcast gather's extra jobs. Measured at one size only, 550
+    pairs x 2120 docs (a 2.2 MB shingle-table estimate) on a 4-vCPU VM,
+    8 runs each: the broadcast gather took a median 0.82 s in 5 jobs,
+    the shuffled one 0.54 s in 3 jobs. Above
+    that threshold (or with no estimate) the broadcast gather runs when
+    the pair list has at most 2M pairs, and the shuffled gather
+    otherwise (deep-recall configs at full corpus scale). Pass
+    ``n_pairs`` when the count is already known (the pipeline reads it
+    from the committed pair stage); otherwise the rule counts ``cands``,
+    in that second case only. Pass ``broadcast_pairs`` explicitly to
+    force one shape."""
     if broadcast_pairs is None:
-        broadcast_pairs = _broadcast_gather(cands, sh)
+        broadcast_pairs = _broadcast_gather(cands, sh, n_pairs)
     left = sh.withColumnRenamed("id", "id_1").withColumnRenamed("_sh", "_sh1")
     right = sh.withColumnRenamed("id", "id_2").withColumnRenamed("_sh", "_sh2")
     if broadcast_pairs:
@@ -961,10 +971,10 @@ class MinHashLSH:
         """Candidates + exact Jaccard over distinct shingle-hash sets,
         filtered at ``threshold``. The verify math is pure JVM
         (array_intersect / array_union on bigint arrays)."""
-        # eager localCheckpoint: the broadcast gather reads the candidate
-        # pairs twice, in concurrent broadcast jobs, and without a
-        # materialized pin each read re-runs the full signature UDF +
-        # shuffle + pair expansion
+        # eager localCheckpoint: the gather rule may count the candidate
+        # pairs and the broadcast gather reads them twice, in concurrent
+        # broadcast jobs; without a materialized pin each read re-runs
+        # the full signature UDF + shuffle + pair expansion
         cands = pin(self.candidate_pairs(df, id_col, text_col), eager=True)
         sh = self.with_shingles(df, text_col).select(
             F.col(id_col).alias("id"), F.col("_sh")

@@ -243,6 +243,14 @@ class DedupPipeline:
         self._record(name, t0, df.count(), dropped_acc)
         return df
 
+    def _stage_rows(self, name: str) -> int | None:
+        """Row count a completed stage already recorded (metrics row for
+        a stage run this call; manifest entry for a resumed one)."""
+        for m in self.metrics:
+            if m["stage"] == name:
+                return m["rows"]
+        return self._manifest.get(name, {}).get("rows")
+
     def _write_lineage(self, stage: str, parts: dict[int, int]) -> None:
         """Write the stage's lineage rows from the driver (no Spark job)
         to ``_lineage/part-<stage>.parquet``, replacing any copy a
@@ -422,13 +430,19 @@ class DedupPipeline:
                 )
 
             # verify the LSH candidates with exact Jaccard on shingle-hash
-            # sets (JVM array_intersect/union), threshold filter; the
-            # gather shape follows the stage tables' size estimates
+            # sets (JVM array_intersect/union), threshold filter. The pair
+            # stage already counted itself, so the gather rule reuses that
+            # count instead of running a count job over the stage table.
+            n_cand = self._stage_rows(
+                "candidates_capped" if cfg.max_verify_degree is not None
+                else "candidates"
+            )
             verified = self._stage(
                 spark, "verified",
                 lambda: exact_jaccard(
                     sh=signatures.select("id", F.col("sh").alias("_sh")),
                     cands=to_verify, threshold=self.jaccard_threshold,
+                    n_pairs=n_cand,
                 ),
             )
         except BaseException:
@@ -669,11 +683,16 @@ class DedupPipeline:
             sh_all = signatures.select(
                 "id", F.col("sh").alias("_sh")
             ).unionByName(store_sigs.select("id", F.col("sh").alias("_sh")))
+            # reuse the pair stage's own count (see run())
+            n_cand = self._stage_rows(
+                "inc_candidates_capped" if cfg.max_verify_degree is not None
+                else "inc_candidates"
+            )
             verified = self._stage(
                 spark, "inc_verified",
                 lambda: exact_jaccard(
                     sh=sh_all, cands=to_verify,
-                    threshold=self.jaccard_threshold,
+                    threshold=self.jaccard_threshold, n_pairs=n_cand,
                 ),
             )
         except BaseException:

@@ -1,15 +1,19 @@
 """Input sizing for the Arrow kernels (``textfns.spread_small_input``)
 and the verify gather rule of ``minhash.exact_jaccard``: both decide from
-the optimizer's size estimates, without running a job."""
+the optimizer's size estimates; the gather rule also needs the pair
+count when the shingle table is too big for Spark to broadcast."""
 
 from contextlib import contextmanager
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from recordlinkage_spark import textfns
 from recordlinkage_spark.minhash import _broadcast_gather, exact_jaccard
 
 ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+AUTO_BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _plan(df) -> str:
@@ -21,13 +25,13 @@ def _broadcast_hinted(df) -> bool:
 
 
 @contextmanager
-def _advisory(spark, size: str):
-    old = spark.conf.get(ADVISORY)
-    spark.conf.set(ADVISORY, size)
+def _conf(spark, key: str, value: str):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(ADVISORY, old)
+        spark.conf.set(key, old)
 
 
 @pytest.fixture
@@ -52,7 +56,7 @@ def test_small_overpartitioned_input_coalesces_to_one_wave(spark, dp):
 
 def test_overpartitioned_input_over_one_wave_is_left_alone(spark, dp):
     df = spark.range(0, 2000, 1, numPartitions=2 * dp + 1)
-    with _advisory(spark, "16b"):  # 2000 longs exceed dp x 16 bytes
+    with _conf(spark, ADVISORY, "16b"):  # 2000 longs exceed dp x 16 bytes
         out = textfns.spread_small_input(df)
     assert out.rdd.getNumPartitions() == 2 * dp + 1
 
@@ -97,16 +101,49 @@ def test_both_gathers_return_identical_rows(verify_inputs):
     assert len(got[True]) > 0
 
 
-def test_gather_rule_follows_size_estimates(spark, verify_inputs):
+def _jobs_in(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_gather_rule_follows_broadcast_threshold(spark, verify_inputs):
     cands, sh = verify_inputs
-    # a small shingle table: shuffled gather, no broadcast hint
-    assert not _broadcast_gather(cands, sh)
-    assert not _broadcast_hinted(exact_jaccard(cands, sh, 0.3))
-    # the same table over one advisory partition: broadcast gather
-    with _advisory(spark, "16b"):
-        assert _broadcast_gather(cands, sh)
-        assert _broadcast_hinted(exact_jaccard(cands, sh, 0.3))
-        # ... unless the pair list has no size estimate
-        lazy = spark.createDataFrame([(1, 0)], "id_1 long, id_2 long")
-        assert textfns.plan_size_bytes(lazy) is None
-        assert not _broadcast_gather(lazy, sh)
+    # a shingle table Spark broadcasts by itself: shuffled gather, no
+    # hint, and no job to decide it
+    picked, jobs = _jobs_in(spark, "rule-small-sh",
+                            lambda: _broadcast_gather(cands, sh))
+    assert not picked and jobs == 0
+    shuffled = exact_jaccard(cands, sh, 0.3)
+    assert not _broadcast_hinted(shuffled)
+    assert "SortMergeJoin" not in _plan(shuffled)
+    # the same table over the threshold, or with Spark's own broadcasts
+    # off: broadcast gather
+    for limit in ("16b", "-1"):
+        with _conf(spark, AUTO_BROADCAST, limit):
+            assert _broadcast_gather(cands, sh)
+            assert _broadcast_gather(cands, sh, n_pairs=10)
+            assert _broadcast_hinted(exact_jaccard(cands, sh, 0.3))
+
+
+def test_gather_rule_bounds_pairs_by_count_not_bytes(spark, tmp_path,
+                                                     verify_inputs):
+    _, sh = verify_inputs
+    path = str(tmp_path / "many_pairs")
+    spark.range(0, 2_000_001, 1, numPartitions=2).select(
+        F.col("id").alias("id_1"), (F.col("id") + 1).alias("id_2")
+    ).write.parquet(path)
+    cands = spark.read.parquet(path)
+    # compressed parquet bytes say nothing about the pair count
+    assert textfns.plan_size_bytes(cands) < 2_000_000 * 16
+    with _conf(spark, AUTO_BROADCAST, "-1"):
+        picked, jobs = _jobs_in(spark, "rule-count",
+                                lambda: _broadcast_gather(cands, sh))
+        assert not picked and jobs >= 1
+        assert not _broadcast_gather(cands, sh, n_pairs=2_000_001)
+        assert _broadcast_gather(cands, sh, n_pairs=2_000_000)
+        assert not _broadcast_hinted(exact_jaccard(cands, sh, 0.3))

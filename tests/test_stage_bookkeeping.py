@@ -135,6 +135,33 @@ def test_resume_after_crash_keeps_one_lineage_set(spark, capped_docs, tmp_path):
     _assert_one_lineage_set_per_stage(spark, wd)
 
 
+def test_verify_gets_the_pair_stage_count(capped_docs, tmp_path, monkeypatch):
+    """The verify gather rule gets the candidates stage's recorded row
+    count, on a fresh run and on a resumed one, so it never counts the
+    pair list itself."""
+    from recordlinkage_spark import minhash
+
+    seen = []
+    real = minhash.exact_jaccard
+
+    def spy(*args, **kwargs):
+        seen.append(kwargs.get("n_pairs"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(minhash, "exact_jaccard", spy)
+    wd = tmp_path / "wd"
+    for _ in range(2):
+        DedupPipeline(EngineConfig(**_CFG), work_dir=str(wd),
+                      jaccard_threshold=0.5).run(
+            capped_docs, id_col="url", text_col="text")
+        manifest = _manifest(wd)
+        manifest.pop("verified")
+        (wd / "manifest.json").write_text(json.dumps(manifest))
+    n = manifest["candidates"]["rows"]
+    assert n > 0
+    assert seen == [n, n]
+
+
 def test_empty_stage_records_zero_rows(spark, tmp_path):
     pipe = DedupPipeline(EngineConfig(), work_dir=str(tmp_path))
     out = pipe._stage(spark, "empty",
