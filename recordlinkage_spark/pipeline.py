@@ -16,11 +16,26 @@ north_rule requirements implemented here:
   committed snapshot's ``files`` metadata table (Iceberg) — the
   bookkeeping runs no Spark job of its own beyond the stage write.
 
-Stage graph:
+Stage graph (manifest stage names; ``opt.`` stages run only when asked):
 
-  records --(opt. keep-latest recrawl collapse, ts_col=...)--> collapsed
-          --MinHashLSH--> candidates --(∪ FingerprintSubstring)--> pairs
-          --exact-Jaccard verify--> matches --ConnectedComponents--> clusters
+  run():              records --(opt. recrawls)--> signatures
+                      pairs: signatures band/fingerprint self-join
+                      (bucket_pairs)
+  run_incremental():  new records --(opt. inc_recrawls)
+                      --(opt. inc_filtered, Bloom exact dedup vs the
+                      corpus)--> inc_signatures
+                      pairs: inc_signatures vs prior_signatures minus
+                      updated ids (pairs_against_bands)
+
+  shared chain (_pair_verify_cluster; stage names prefixed "inc_" in
+  the incremental flow):
+
+      candidates --(opt. candidates_capped)--> verified --+--> matches
+      substring_pairs (concurrent, bypasses the Jaccard gate) --+
+      matches (∪ prior cluster edges, incremental only) --> clusters
+
+  run() then adds the opt. ``cleaned`` (span removal) and ``keep``
+  (quality_col survivor flag) stages.
 """
 
 from __future__ import annotations
@@ -38,9 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recordlinkage_spark.config import EngineConfig
-from recordlinkage_spark.minhash import MinHashLSH
 from recordlinkage_spark.network import ConnectedComponents
-from recordlinkage_spark.suffix import FingerprintSubstring
 from recordlinkage_spark.caching import pin
 
 
@@ -115,8 +128,8 @@ class DedupPipeline:
         self.metrics: list[dict] = []
         self._manifest: dict = {}
         # serializes manifest/metrics mutation when independent
-        # stages run concurrently (run() overlaps the substring pass with
-        # the candidates->verify chain, guide §2.6)
+        # stages run concurrently (_pair_verify_cluster overlaps the
+        # substring pass with the candidates->verify chain, guide §2.6)
         self._lock = threading.Lock()
 
     # --- checkpoint plumbing ------------------------------------------------
@@ -199,8 +212,10 @@ class DedupPipeline:
                 parts, nbytes)
 
     def _read_stage(self, spark: SparkSession, name: str) -> DataFrame:
+        """Read a completed stage back in the format its manifest entry
+        recorded, which need not be the current config's."""
         entry = self._manifest[name]
-        if self.config.stage_format == "iceberg":
+        if entry["format"] == "iceberg":
             reader = spark.read
             if entry.get("snapshot_id") is not None:
                 reader = reader.option("snapshot-id", str(entry["snapshot_id"]))
@@ -274,8 +289,8 @@ class DedupPipeline:
     def _record(self, stage: str, t0: float, n: int, dropped_acc=None,
                 nbytes: int | None = None) -> None:
         """Append the stage's ONE metrics row; ``nbytes`` is the stage
-        table's committed size (None without a work_dir). Locked: run()
-        records the substring stage from its worker thread."""
+        table's committed size (None without a work_dir). Locked: the
+        substring stage records from its worker thread."""
         row = {"stage": stage, "rows": n, "secs": round(time.time() - t0, 3),
                "bytes": nbytes}
         if dropped_acc is not None:
@@ -305,6 +320,127 @@ class DedupPipeline:
         )
 
     # --- the pipeline ---------------------------------------------------------
+    def _collapse_recrawls(self, spark: SparkSession, name: str,
+                           records: DataFrame, id_col: str, ts_col: str,
+                           canonicalize_urls: bool):
+        """The keep-latest recrawl-collapse stage ``name``: returns the
+        stage output (survivor rows + ``n_crawls``) and the records keyed
+        on the CANONICAL url that every downstream stage uses (the
+        surviving raw url and its crawl count stay in the stage output)."""
+        from recordlinkage_spark.webtext import dedup_url_keep_latest
+
+        collapsed = self._stage(
+            spark, name,
+            lambda: dedup_url_keep_latest(
+                records, url_col=id_col, ts_col=ts_col,
+                canonicalize=canonicalize_urls,
+            ),
+        )
+        keep_cols = [c for c in records.columns if c != id_col]
+        return collapsed, collapsed.select(
+            F.col("url_key").alias(id_col), *keep_cols)
+
+    def _pair_verify_cluster(self, spark: SparkSession, prefix: str,
+                             build_candidates, build_sub_pairs,
+                             sh: DataFrame, id_col: str,
+                             prior_edges: DataFrame | None = None):
+        """The stage chain both flows share, over stage names
+        ``prefix + name``: ``candidates`` (opt. ``candidates_capped``) ->
+        ``verified``, with ``substring_pairs`` running concurrently, then
+        ``matches`` -> ``clusters``. ``build_candidates`` and
+        ``build_sub_pairs`` take the pass's dropped-bucket accumulator and
+        return ``(id_1, id_2)`` pairs — the self-join (:meth:`run`) and
+        the batch-vs-store join (:meth:`run_incremental`) differ only
+        there. ``sh`` is the ``(id, _sh)`` shingle table the verify
+        gathers from; ``prior_edges`` are extra ``(id_1, id_2)`` edges
+        for the components. Returns ``(candidates, matches, clusters)``."""
+        from recordlinkage_spark.minhash import exact_jaccard
+
+        cfg = self.config
+        # The substring pass depends only on the signatures, so it runs
+        # CONCURRENTLY with the candidates -> verify chain (guide §2.6:
+        # overlap independent jobs so one job's tasks back-fill executors
+        # left idle by the other's stragglers / fixed per-job overhead).
+        # _stage serializes manifest/metrics mutation behind self._lock;
+        # the Spark scheduler interleaves the two jobs' tasks. Leaving the
+        # with block joins the worker thread, also when a stage raises.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            sub_future = None
+            if self.use_substring_pass:
+                sub_dropped = spark.sparkContext.accumulator(0)
+                sub_future = pool.submit(
+                    self._stage, spark, prefix + "substring_pairs",
+                    lambda: build_sub_pairs(sub_dropped).withColumn(
+                        "jaccard", F.lit(None).cast("double")),
+                    sub_dropped,
+                )
+            # dropped-bucket accumulators: the streaming pair expander
+            # drops buckets over the cap; the counts land in the stage's
+            # metrics row so skew/truncation stays observable (north_rule)
+            cand_dropped = spark.sparkContext.accumulator(0)
+            candidates = self._stage(
+                spark, prefix + "candidates",
+                lambda: build_candidates(cand_dropped), cand_dropped)
+
+            # Boilerplate-clique pressure valve (opt-in): cap each doc's
+            # verified-pair degree before the quadratic shingle gather;
+            # the cluster output is unchanged (minhash.cap_pair_degree
+            # docstring has the connectivity argument + measurements).
+            # Its own checkpointed stage so resume skips the double
+            # window shuffle.
+            to_verify, pair_stage = candidates, prefix + "candidates"
+            if cfg.max_verify_degree is not None:
+                from recordlinkage_spark.minhash import cap_pair_degree
+
+                pair_stage = prefix + "candidates_capped"
+                to_verify = self._stage(
+                    spark, pair_stage,
+                    lambda: cap_pair_degree(candidates, cfg.max_verify_degree),
+                )
+
+            # exact Jaccard on shingle-hash sets, threshold filter. The
+            # pair stage already counted itself, so the gather rule reuses
+            # that count instead of running a count job over the table.
+            verified = self._stage(
+                spark, prefix + "verified",
+                lambda: exact_jaccard(
+                    sh=sh, cands=to_verify, threshold=self.jaccard_threshold,
+                    n_pairs=self._stage_rows(pair_stage),
+                ),
+            )
+            sub_pairs = None if sub_future is None else sub_future.result()
+
+        matches = verified
+        if sub_pairs is not None:
+            # substring dups have LOW global Jaccard by construction, so
+            # they bypass the Jaccard gate: the winnowing fingerprint is a
+            # deterministic witness of a shared >=span+window-1-token run.
+            # Merge the two pass outputs per pair with max(jaccard), NOT
+            # dropDuplicates: a pair found by both passes has one row with
+            # the verified jaccard and one with null, and dropDuplicates
+            # keeps whichever arrives first — partitioning-dependent, so
+            # matches.jaccard would flip between runs. max() ignores nulls
+            # and is deterministic (substring-only pairs stay null).
+            matches = self._stage(
+                spark, prefix + "matches",
+                lambda: verified.unionByName(sub_pairs)
+                .groupBy("id_1", "id_2")
+                .agg(F.max("jaccard").alias("jaccard")),
+            )
+
+        def build_clusters() -> DataFrame:
+            edges = matches.select("id_1", "id_2")
+            if prior_edges is not None:
+                edges = edges.unionByName(prior_edges)
+            # matches alone is a materialized stage table -> skip CC's
+            # defensive lineage pin (one less checkpoint job, r6)
+            return ConnectedComponents().compute(
+                edges, input_pinned=prior_edges is None
+            ).withColumnRenamed("id", id_col)
+
+        clusters = self._stage(spark, prefix + "clusters", build_clusters)
+        return candidates, matches, clusters
+
     def run(
         self,
         records: DataFrame,
@@ -333,7 +469,7 @@ class DedupPipeline:
         output (survivor rows + ``n_crawls``), checkpointed/resumable
         like every other stage. ``canonicalize_urls=False`` collapses on
         the raw url instead."""
-        from recordlinkage_spark.minhash import bucket_pairs, exact_jaccard
+        from recordlinkage_spark.minhash import bucket_pairs
 
         spark = records.sparkSession
         self._load_manifest()
@@ -344,151 +480,36 @@ class DedupPipeline:
         self.metrics = []
         cfg = self.config
 
-        out_extra: dict[str, DataFrame] = {}
+        out: dict[str, DataFrame] = {}
         if ts_col is not None:
-            from recordlinkage_spark.webtext import dedup_url_keep_latest
-
-            collapsed = self._stage(
-                spark, "recrawls",
-                lambda: dedup_url_keep_latest(
-                    records, url_col=id_col, ts_col=ts_col,
-                    canonicalize=canonicalize_urls,
-                ),
-            )
-            out_extra["collapsed"] = collapsed
-            # downstream identity is the CANONICAL url; the surviving raw
-            # url (and its crawl count) stay available in out['collapsed']
-            keep_cols = [c for c in records.columns if c != id_col]
-            records = collapsed.select(
-                F.col("url_key").alias(id_col), *keep_cols
-            )
+            out["collapsed"], records = self._collapse_recrawls(
+                spark, "recrawls", records, id_col, ts_col, canonicalize_urls)
         id_type = records.schema[id_col].dataType.simpleString()
 
         # the materialized signature stage feeds every downstream pass —
-        # the corpus text crosses into Python exactly once per run
-        signatures = self._stage(
+        # the corpus text crosses into Python exactly once per run; it is
+        # also the store a later run_incremental pairs new snapshots against
+        signatures = out["signatures"] = self._stage(
             spark, "signatures",
             lambda: _signature_frame(records, cfg, id_col, text_col),
         )
 
-        # The substring pass depends ONLY on signatures, so it runs
-        # CONCURRENTLY with the candidates -> verify chain (guide §2.6:
-        # overlap independent jobs so one job's tasks back-fill executors
-        # left idle by the other's stragglers / fixed per-job overhead).
-        # _stage serializes manifest/metrics mutation behind
-        # self._lock; the Spark scheduler interleaves the two jobs' tasks.
-        sub_future = None
-        sub_executor = None
-        if self.use_substring_pass:
-            sub_dropped = spark.sparkContext.accumulator(0)
-
-            def build_sub_pairs() -> DataFrame:
-                fp_rows = signatures.select("id", F.explode("fps").alias("fp"))
-                return bucket_pairs(
-                    fp_rows, ["fp"], cfg.max_bucket_size, id_type,
-                    dropped_acc=sub_dropped,
-                ).withColumn("jaccard", F.lit(None).cast("double"))
-
-            sub_executor = ThreadPoolExecutor(max_workers=1)
-            sub_future = sub_executor.submit(
-                self._stage, spark, "substring_pairs", build_sub_pairs,
-                sub_dropped,
-            )
-
-        # dropped-bucket accumulators: the streaming pair expander drops
-        # buckets over the cap; the counts land in the stage's metrics
-        # row so skew/truncation stays observable (north_rule)
-        cand_dropped = spark.sparkContext.accumulator(0)
-
-        def build_candidates() -> DataFrame:
+        def candidates(dropped_acc) -> DataFrame:
             return bucket_pairs(
                 _band_rows(signatures), ["band_key"], cfg.max_bucket_size,
-                id_type, dropped_acc=cand_dropped,
+                id_type, dropped_acc=dropped_acc,
             )
 
-        try:
-            candidates = self._stage(
-                spark, "candidates", build_candidates, cand_dropped)
-        except BaseException:
-            if sub_executor is not None:  # don't leak the worker thread
-                sub_executor.shutdown(wait=True)
-            raise
+        def substring_pairs(dropped_acc) -> DataFrame:
+            fp_rows = signatures.select("id", F.explode("fps").alias("fp"))
+            return bucket_pairs(fp_rows, ["fp"], cfg.max_bucket_size,
+                                id_type, dropped_acc=dropped_acc)
 
-        # Boilerplate-clique pressure valve (opt-in): cap each doc's
-        # verified-pair degree before the quadratic shingle gather; the
-        # cluster output is unchanged (minhash.cap_pair_degree docstring
-        # has the connectivity argument + measurements). Its own
-        # checkpointed stage so resume skips the double window shuffle.
-        try:
-            to_verify = candidates
-            if cfg.max_verify_degree is not None:
-                from recordlinkage_spark.minhash import cap_pair_degree
-
-                to_verify = self._stage(
-                    spark, "candidates_capped",
-                    lambda: cap_pair_degree(candidates, cfg.max_verify_degree),
-                )
-
-            # verify the LSH candidates with exact Jaccard on shingle-hash
-            # sets (JVM array_intersect/union), threshold filter. The pair
-            # stage already counted itself, so the gather rule reuses that
-            # count instead of running a count job over the stage table.
-            n_cand = self._stage_rows(
-                "candidates_capped" if cfg.max_verify_degree is not None
-                else "candidates"
-            )
-            verified = self._stage(
-                spark, "verified",
-                lambda: exact_jaccard(
-                    sh=signatures.select("id", F.col("sh").alias("_sh")),
-                    cands=to_verify, threshold=self.jaccard_threshold,
-                    n_pairs=n_cand,
-                ),
-            )
-        except BaseException:
-            if sub_executor is not None:
-                sub_executor.shutdown(wait=True)
-            raise
-
-        if self.use_substring_pass:
-            # substring dups have LOW global Jaccard by construction, so
-            # they bypass the Jaccard gate: the winnowing fingerprint is a
-            # deterministic witness of a shared >=span+window-1-token run.
-            # (launched concurrently above — join the worker thread here)
-            try:
-                sub_pairs = sub_future.result()
-            finally:
-                sub_executor.shutdown(wait=True)
-            # merge the two pass outputs per pair with max(jaccard), NOT
-            # dropDuplicates: a pair found by both passes has one row with
-            # the verified jaccard and one with null, and dropDuplicates
-            # keeps whichever arrives first — partitioning-dependent, so
-            # matches.jaccard would flip between runs. max() ignores nulls
-            # and is deterministic (substring-only pairs stay null).
-            matches = self._stage(
-                spark, "matches",
-                lambda: verified.unionByName(sub_pairs)
-                .groupBy("id_1", "id_2")
-                .agg(F.max("jaccard").alias("jaccard")),
-            )
-        else:
-            matches = verified
-        pairs = candidates
-
-        cc = ConnectedComponents()
-        clusters = self._stage(
-            spark, "clusters",
-            # matches is a materialized stage table -> skip CC's
-            # defensive lineage pin (one less checkpoint job, r6)
-            lambda: cc.compute(
-                matches.select("id_1", "id_2"), input_pinned=True
-            ).withColumnRenamed("id", id_col),
-        )
-        out = {"pairs": pairs, "matches": matches, "clusters": clusters,
-               # the per-doc signature stage (id, bands, fps, sh) — the
-               # store a later run_incremental pairs new snapshots against
-               "signatures": signatures}
-        out.update(out_extra)
+        out["pairs"], out["matches"], out["clusters"] = (
+            self._pair_verify_cluster(
+                spark, "", candidates, substring_pairs,
+                signatures.select("id", F.col("sh").alias("_sh")), id_col,
+            ))
         if self.remove_spans:
             # ExactSubstr span removal (suffix.remove_duplicate_spans):
             # rewrites the TEXT, complementing the doc-level cluster/keep
@@ -518,7 +539,7 @@ class DedupPipeline:
             out["keep"] = self._stage(
                 spark, "keep",
                 lambda: select_representatives(
-                    clusters,
+                    out["clusters"],
                     records.select(id_col, quality_col),
                     id_col=id_col,
                     order_cols=[F.desc(quality_col)],
@@ -585,7 +606,7 @@ class DedupPipeline:
         Returns ``{'pairs', 'matches', 'clusters'}`` plus
         ``'collapsed'`` / ``'new_unique'`` when tiers 1 / 2 ran.
         """
-        from recordlinkage_spark.minhash import exact_jaccard, pairs_against_bands
+        from recordlinkage_spark.minhash import pairs_against_bands
 
         spark = new_records.sparkSession
         self._load_manifest()
@@ -595,31 +616,18 @@ class DedupPipeline:
         out: dict[str, DataFrame] = {}
         records = new_records
         if ts_col is not None:
-            from recordlinkage_spark.webtext import dedup_url_keep_latest
-
-            collapsed = self._stage(
-                spark, "inc_recrawls",
-                lambda: dedup_url_keep_latest(
-                    records, url_col=id_col, ts_col=ts_col,
-                    canonicalize=canonicalize_urls,
-                ),
-            )
-            out["collapsed"] = collapsed
-            keep_cols = [c for c in records.columns if c != id_col]
-            records = collapsed.select(
-                F.col("url_key").alias(id_col), *keep_cols
-            )
+            out["collapsed"], records = self._collapse_recrawls(
+                spark, "inc_recrawls", records, id_col, ts_col,
+                canonicalize_urls)
         if exact_dedup_against is not None:
             from recordlinkage_spark.bloom import dedup_against
 
             keys = list(exact_keys) if exact_keys else [text_col]
             batch = records
-            filtered = self._stage(
+            records = out["new_unique"] = self._stage(
                 spark, "inc_filtered",
                 lambda: dedup_against(batch, exact_dedup_against, keys),
             )
-            out["new_unique"] = filtered
-            records = filtered
         id_type = records.schema[id_col].dataType.simpleString()
 
         signatures = self._stage(
@@ -632,103 +640,30 @@ class DedupPipeline:
             signatures.select("id"), "id", "left_anti"
         )
 
-        cand_dropped = spark.sparkContext.accumulator(0)
-
-        def build_candidates() -> DataFrame:
+        def candidates(dropped_acc) -> DataFrame:
             return pairs_against_bands(
                 _band_rows(signatures), _band_rows(store_sigs), id_type,
-                cfg.max_bucket_size, dropped_acc=cand_dropped,
+                cfg.max_bucket_size, dropped_acc=dropped_acc,
             )
 
-        # overlap the substring pass with the candidates -> verify chain,
-        # exactly as run() does (guide §2.6) — both depend only on
-        # (signatures, store_sigs)
-        sub_future = None
-        sub_executor = None
-        if self.use_substring_pass:
-            sub_dropped = spark.sparkContext.accumulator(0)
+        def substring_pairs(dropped_acc) -> DataFrame:
+            new_fp = signatures.select("id", F.explode("fps").alias("band_key"))
+            old_fp = store_sigs.select("id", F.explode("fps").alias("band_key"))
+            return pairs_against_bands(new_fp, old_fp, id_type,
+                                       cfg.max_bucket_size,
+                                       dropped_acc=dropped_acc)
 
-            def build_sub_pairs() -> DataFrame:
-                new_fp = signatures.select(
-                    "id", F.explode("fps").alias("band_key"))
-                old_fp = store_sigs.select(
-                    "id", F.explode("fps").alias("band_key"))
-                return pairs_against_bands(
-                    new_fp, old_fp, id_type, cfg.max_bucket_size,
-                    dropped_acc=sub_dropped,
-                ).withColumn("jaccard", F.lit(None).cast("double"))
-
-            sub_executor = ThreadPoolExecutor(max_workers=1)
-            sub_future = sub_executor.submit(
-                self._stage, spark, "inc_substring_pairs", build_sub_pairs,
-                sub_dropped,
-            )
-
-        try:
-            candidates = self._stage(
-                spark, "inc_candidates", build_candidates, cand_dropped)
-
-            # same boilerplate-clique valve as run(): a snapshot whose docs
-            # share a header with the store forms a true new-vs-store
-            # near-clique, and the verify gather is quadratic in it
-            to_verify = candidates
-            if cfg.max_verify_degree is not None:
-                from recordlinkage_spark.minhash import cap_pair_degree
-
-                to_verify = self._stage(
-                    spark, "inc_candidates_capped",
-                    lambda: cap_pair_degree(candidates, cfg.max_verify_degree),
-                )
-
-            sh_all = signatures.select(
-                "id", F.col("sh").alias("_sh")
-            ).unionByName(store_sigs.select("id", F.col("sh").alias("_sh")))
-            # reuse the pair stage's own count (see run())
-            n_cand = self._stage_rows(
-                "inc_candidates_capped" if cfg.max_verify_degree is not None
-                else "inc_candidates"
-            )
-            verified = self._stage(
-                spark, "inc_verified",
-                lambda: exact_jaccard(
-                    sh=sh_all, cands=to_verify,
-                    threshold=self.jaccard_threshold, n_pairs=n_cand,
-                ),
-            )
-        except BaseException:
-            if sub_executor is not None:  # don't leak the worker thread
-                sub_executor.shutdown(wait=True)
-            raise
-
-        if self.use_substring_pass:
-            try:
-                sub_pairs = sub_future.result()
-            finally:
-                sub_executor.shutdown(wait=True)
-            # same deterministic max(jaccard) merge as run() — see the
-            # matches stage comment there
-            matches = self._stage(
-                spark, "inc_matches",
-                lambda: verified.unionByName(sub_pairs)
-                .groupBy("id_1", "id_2")
-                .agg(F.max("jaccard").alias("jaccard")),
-            )
-        else:
-            matches = verified
-
-        cc = ConnectedComponents()
-
-        def build_clusters() -> DataFrame:
-            edges = matches.select("id_1", "id_2")
-            if prior_clusters is not None:
-                prior_edges = prior_clusters.select(
-                    F.col(id_col).alias("id_1"),
-                    F.col("cluster_id").alias("id_2"),
-                ).filter(F.col("id_1") != F.col("id_2"))
-                edges = edges.unionByName(prior_edges)
-            return cc.compute(edges).withColumnRenamed("id", id_col)
-
-        clusters = self._stage(spark, "inc_clusters", build_clusters)
-        out.update({"pairs": candidates, "matches": matches,
-                    "clusters": clusters})
+        sh_all = signatures.select(
+            "id", F.col("sh").alias("_sh")
+        ).unionByName(store_sigs.select("id", F.col("sh").alias("_sh")))
+        prior_edges = None
+        if prior_clusters is not None:
+            prior_edges = prior_clusters.select(
+                F.col(id_col).alias("id_1"), F.col("cluster_id").alias("id_2"),
+            ).filter(F.col("id_1") != F.col("id_2"))
+        out["pairs"], out["matches"], out["clusters"] = (
+            self._pair_verify_cluster(
+                spark, "inc_", candidates, substring_pairs, sh_all, id_col,
+                prior_edges,
+            ))
         return out

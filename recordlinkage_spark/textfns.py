@@ -108,7 +108,7 @@ def spread_small_input(df, min_bytes: int | None = None):
 
 def _rot13_xor_np(acc: np.ndarray, h) -> np.ndarray:
     """uint64 rotate-left-13 then xor — the order-sensitive hash combine
-    (numpy twin of :func:`_rotl_xor`)."""
+    of :func:`gram_hashes_np`."""
     return ((acc << _U13) | (acc >> _U51)) ^ h
 
 
@@ -275,16 +275,16 @@ def flat_token_hashes_np(texts: pd.Series):
 def gram_hashes_np(flat: np.ndarray, lengths: np.ndarray, n: int):
     """Word-n-gram hashes per doc over the flat token-hash array.
 
-    WINDOWING semantics match :func:`gram_hashes` (the JVM variant): a doc
-    with ``len > n`` emits ``len-n+1`` position-order grams (NOT deduped —
-    call :func:`distinct_per_doc_np` when set semantics are needed); a doc
-    with ``0 <= len <= n`` emits ONE hash folding all tokens from 0 (empty
-    doc -> [0]) so short docs still index. The HASH DOMAIN does NOT match:
-    this kernel rolls rot13-xor over the caller's token hashes while the
-    JVM variant xxhash64's gram strings and dedups — the two are not
-    interchangeable, so a pass must verify candidates against shingles
-    produced by the SAME kernel. Null docs (length 0 *and* masked by the
-    caller) are the caller's business — here len==0 emits [0].
+    A doc with ``len > n`` emits ``len-n+1`` position-order grams (NOT
+    deduped — call :func:`distinct_per_doc_np` when set semantics are
+    needed); a doc with ``0 <= len <= n`` emits ONE hash folding all
+    tokens from 0 (empty doc -> [0]) so short docs still index. Each gram
+    rolls rot13-xor over the caller's token hashes; the JVM shingles
+    (:func:`shingle_hashes`) xxhash64 gram strings instead, so the two
+    are not interchangeable and a pass must verify candidates against
+    shingles produced by the SAME kernel. Null docs (length 0 *and*
+    masked by the caller) are the caller's business — here len==0 emits
+    [0].
 
     Returns ``(grams, counts)``: flat uint64 grams + per-doc gram counts.
     """
@@ -431,62 +431,6 @@ def shingle_hashes(shingle_col: Column) -> Column:
     """xxhash64 each shingle JVM-side -> array<bigint>; the Python passes
     (MinHash/SimHash) consume hashes, never strings."""
     return F.transform(shingle_col, lambda s: F.xxhash64(s))
-
-
-def _rotl_xor(acc: Column, h: Column) -> Column:
-    """Order-sensitive hash combine using only bit ops (rotl-13 then xor) —
-    ANSI-safe: long multiply/add would throw on overflow under Spark 4's
-    default ANSI mode, bit shifts cannot."""
-    rot = F.shiftleft(acc, 13).bitwiseOR(F.shiftrightunsigned(acc, 51))
-    return rot.bitwiseXOR(h)
-
-
-def token_hashes(tok_col: Column) -> Column:
-    """xxhash64 per token -> array<bigint>."""
-    return F.transform(tok_col, lambda t: F.xxhash64(t))
-
-
-def gram_hashes(th_col: Column, n_tokens: Column, n: int) -> Column:
-    """Distinct word-n-gram hashes from an ALREADY-BOUND token-hash array
-    column: combine n consecutive token hashes with rotate-xor — pure long
-    bit ops in codegen, no n-gram strings.
-
-    IMPORTANT: ``th_col``/``n_tokens`` must be real columns (attributes),
-    not inline expressions — ``element_at`` references the array n times
-    per gram position and Catalyst re-inlines non-attribute expressions at
-    every use site (an O(tokens^2) blowup measured at 8x wall time).
-    """
-
-    def combine(i):
-        acc = F.element_at(th_col, i + 1)
-        for j in range(1, n):
-            acc = _rotl_xor(acc, F.element_at(th_col, i + 1 + j))
-        return acc
-
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_tokens - n, F.lit(0))), combine
-    )
-    # short doc -> one shingle combining all tokens
-    whole = F.aggregate(th_col, F.lit(0).cast("long"), _rotl_xor)
-    return F.when(n_tokens <= n, F.array(whole)).otherwise(F.array_distinct(grams))
-
-
-def with_word_shingle_hashes(df, text_col: str, n: int, out: str = "_sh"):
-    """df + ``out`` = distinct word-n-gram hash array. Binds the token and
-    token-hash arrays as real columns first (see gram_hashes)."""
-    df = df.withColumn("_toks__", tokens(F.col(text_col)))
-    df = df.withColumn("_th__", token_hashes(F.col("_toks__")))
-    df = df.withColumn(
-        out, gram_hashes(F.col("_th__"), F.size(F.col("_toks__")), n)
-    )
-    return df.drop("_toks__", "_th__")
-
-
-def word_shingle_hashes(tok_col: Column, n: int) -> Column:
-    """Single-expression variant for small/test data. On hot paths use
-    :func:`with_word_shingle_hashes` (bound columns, no re-inlining)."""
-    th = token_hashes(tok_col)
-    return gram_hashes(th, F.size(tok_col), n)
 
 
 # --- language ID (n-gram/stopword heuristic) -------------------------------

@@ -123,7 +123,7 @@ def main() -> None:
     cand = pin(cand_lazy, eager=True)
     ver_lazy = exact_jaccard(
         sh=sig.select("id", F.col("sh").alias("_sh")), cands=cand,
-        threshold=0.5, broadcast_pairs=True)
+        threshold=0.5, n_pairs=cand.count())
     parts.append(("stage verified", explain_str(ver_lazy)))
     sub_lazy = bucket_pairs(
         sig.select("id", F.explode("fps").alias("fp")), ["fp"],

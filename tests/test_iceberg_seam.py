@@ -103,6 +103,20 @@ def test_parquet_default_has_no_snapshot(tmp_path, spark):
     assert manifest["probe"]["snapshot_id"] is None
 
 
+def test_resume_reads_the_recorded_format(tmp_path, spark):
+    """Resume reads a stage in the format its manifest entry recorded: a
+    parquet work_dir resumed under an iceberg config reads the parquet
+    files back, not a catalog table named by the file path."""
+    DedupPipeline(EngineConfig(), work_dir=tmp_path)._stage(
+        spark, "probe", lambda: spark.range(5))
+    pipe = DedupPipeline(_cfg(), work_dir=tmp_path)
+    pipe._load_manifest()
+    out = pipe._stage(spark, "probe", lambda: (_ for _ in ()).throw(
+        AssertionError("resume must not rebuild the stage")
+    ))
+    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3, 4]
+
+
 def test_counts_from_snapshot_data_files(tmp_path):
     """Row counts per write partition and the byte total come from the
     committed snapshot's data files (several files may share a

@@ -162,6 +162,16 @@ def test_run_incremental_equals_full_batch(spark, tmp_path):
     for r in inc_out["matches"].collect():
         assert r["id_1"] in new_ids or r["id_2"] in new_ids
 
+    # without prior clusters the components run over the new matches alone
+    alone = DedupPipeline(
+        EngineConfig(**_CFG), jaccard_threshold=0.5
+    ).run_incremental(new, prior_sigs, None, id_col="url", text_col="text")
+    assert alone["matches"].count() > 0
+    cc = ConnectedComponents().compute(
+        alone["matches"].select("id_1", "id_2")).withColumnRenamed("id", "url")
+    assert alone["clusters"].exceptAll(cc).count() == 0
+    assert cc.exceptAll(alone["clusters"]).count() == 0
+
 
 def test_run_incremental_resume(spark, tmp_path):
     docs, _ = webtext_corpus(spark, n_docs=200, dup_fraction=0.3, seed=11)
@@ -178,7 +188,9 @@ def test_run_incremental_resume(spark, tmp_path):
     out1 = first.run_incremental(new, prior_sigs, base_out["clusters"],
                                  id_col="url", text_col="text")
     want = sorted(map(tuple, out1["clusters"].collect()))
-    assert any(m["stage"] == "inc_clusters" for m in first.metrics)
+    assert {m["stage"] for m in first.metrics} == {
+        "inc_signatures", "inc_candidates", "inc_substring_pairs",
+        "inc_verified", "inc_matches", "inc_clusters"}
 
     resumed = DedupPipeline(EngineConfig(**_CFG), work_dir=wd,
                             jaccard_threshold=0.5)

@@ -18,7 +18,8 @@ def rot_xor(acc, h):
 
 
 def naive_grams(doc_hashes, n):
-    """Per-doc reference: same semantics as textfns.gram_hashes (JVM)."""
+    """Per-doc reference for textfns.gram_hashes_np: rot13-xor over each
+    n-token window, or one fold of all tokens for a doc of at most n."""
     h = [np.uint64(x) for x in doc_hashes]
     if len(h) <= n:
         acc = np.uint64(0)

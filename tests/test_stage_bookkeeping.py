@@ -135,10 +135,11 @@ def test_resume_after_crash_keeps_one_lineage_set(spark, capped_docs, tmp_path):
     _assert_one_lineage_set_per_stage(spark, wd)
 
 
-def test_verify_gets_the_pair_stage_count(capped_docs, tmp_path, monkeypatch):
-    """The verify gather rule gets the candidates stage's recorded row
-    count, on a fresh run and on a resumed one, so it never counts the
-    pair list itself."""
+def test_verify_gets_the_pair_stage_count(finished_run, capped_docs, tmp_path,
+                                          monkeypatch):
+    """The verify gather rule gets the pair stage's recorded row count
+    (``candidates`` / ``inc_candidates``), on a fresh run and on a
+    resumed one, so it never counts the pair list itself."""
     from recordlinkage_spark import minhash
 
     seen = []
@@ -149,17 +150,67 @@ def test_verify_gets_the_pair_stage_count(capped_docs, tmp_path, monkeypatch):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(minhash, "exact_jaccard", spy)
+    spark = capped_docs.sparkSession
+    prior_sigs = spark.read.parquet(str(finished_run[1] / "signatures"))
+    # new urls for the same pages: every doc pairs with its stored twin
+    new_docs = capped_docs.select(
+        F.concat(F.lit("new:"), "url").alias("url"), "text")
+    flows = {
+        "candidates": lambda p: p.run(
+            capped_docs, id_col="url", text_col="text"),
+        "inc_candidates": lambda p: p.run_incremental(
+            new_docs, prior_sigs, id_col="url", text_col="text"),
+    }
+    for pair_stage, flow in flows.items():
+        seen.clear()
+        wd = tmp_path / pair_stage
+        for _ in range(2):
+            flow(DedupPipeline(EngineConfig(**_CFG), work_dir=str(wd),
+                               jaccard_threshold=0.5))
+            manifest = _manifest(wd)
+            manifest.pop(pair_stage.replace("candidates", "verified"))
+            (wd / "manifest.json").write_text(json.dumps(manifest))
+        n = manifest[pair_stage]["rows"]
+        assert n > 0
+        assert seen == [n, n], pair_stage
+
+
+def test_verify_failure_joins_substring_worker_and_resumes(
+        spark, finished_run, capped_docs, tmp_path, monkeypatch):
+    """A verify stage that raises while the concurrent substring stage
+    may still be in flight: the error propagates, the run leaves no
+    worker thread behind, the substring stage still commits, and a
+    resumed run re-runs only the stages after the failure."""
+    import threading
+
+    from recordlinkage_spark import minhash
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("verify failed")
+
     wd = tmp_path / "wd"
-    for _ in range(2):
-        DedupPipeline(EngineConfig(**_CFG), work_dir=str(wd),
-                      jaccard_threshold=0.5).run(
-            capped_docs, id_col="url", text_col="text")
-        manifest = _manifest(wd)
-        manifest.pop("verified")
-        (wd / "manifest.json").write_text(json.dumps(manifest))
-    n = manifest["candidates"]["rows"]
-    assert n > 0
-    assert seen == [n, n]
+    before = set(threading.enumerate())
+    with monkeypatch.context() as m:
+        m.setattr(minhash, "exact_jaccard", boom)
+        with pytest.raises(RuntimeError, match="verify failed"):
+            DedupPipeline(EngineConfig(**_CFG), work_dir=str(wd),
+                          jaccard_threshold=0.5).run(
+                capped_docs, id_col="url", text_col="text")
+    leaked = [t for t in threading.enumerate()
+              if t not in before and t.name.startswith("ThreadPoolExecutor")]
+    assert leaked == []
+    manifest = _manifest(wd)
+    assert {"candidates", "substring_pairs"} <= set(manifest)
+    assert "verified" not in manifest
+
+    resumed = DedupPipeline(EngineConfig(**_CFG), work_dir=str(wd),
+                            jaccard_threshold=0.5)
+    out = resumed.run(capped_docs, id_col="url", text_col="text")
+    assert [m["stage"] for m in resumed.metrics] == [
+        "verified", "matches", "clusters"]
+    want = spark.read.parquet(str(finished_run[1] / "clusters"))
+    assert sorted(map(tuple, out["clusters"].collect())) == sorted(
+        map(tuple, want.collect()))
 
 
 def test_empty_stage_records_zero_rows(spark, tmp_path):
