@@ -13,10 +13,10 @@ differently:
 * **fit** is driver-side numpy: training sets for pair classification
   are human-labeled and therefore small by construction. A count gate
   fails fast (with a ``.sample()`` hint) instead of silently collecting
-  an unbounded table, mirroring ``_guard_discrete``
-  (classifiers.py:130-148). Unlike the native classifiers there is no
-  unique-vector compression here — an arbitrary kernel may be
-  non-linear in continuous features — so the gate is on raw rows.
+  an unbounded table, mirroring ``classifiers._guarded_collect``.
+  Unlike the native classifiers there is no unique-vector compression
+  here — an arbitrary kernel may be non-linear in continuous features —
+  so the gate is on raw rows.
 
 * **predict** is fully distributed: the fitted kernel is broadcast
   (pickled once per executor, not per task) and scored inside

@@ -70,7 +70,7 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str,
                     caller: str = "this function"):
     """Driver-side (ids, matrix) for a broadcastable vector set.
 
-    Count-gated (mirrors classifiers._guard_discrete): these matrices are
+    Count-gated (mirrors classifiers._guarded_collect): these matrices are
     broadcast into Arrow kernels, so they must be driver/executor-resident.
     A user pointing the query/oracle side at a corpus-scale table gets a
     diagnosed ValueError naming the bucketed alternative instead of a

@@ -118,51 +118,37 @@ class LogisticRegressionClassifier(BaseClassifier):
         )
 
 
-def _guard_discrete(features: DataFrame, cols: list[str],
-                    max_unique: int = 100_000) -> None:
-    """Fail fast before collecting the unique-vector table.
+def _guarded_collect(agg: DataFrame, cols: list[str],
+                     max_unique: int = 100_000):
+    """Collect a unique-vector aggregate (group columns plus ``count``) to
+    the driver as ``(X, wts)``: one row of X per group, in the aggregate's
+    column order, rows sorted by X's columns.
 
-    Driver-side fits (LogReg/NB/ECM sufficient-statistics trick) assume
-    DISCRETE feature vectors — the reference shares the assumption
+    Driver-side fits (LogReg/NB/ECM/SVM sufficient-statistics trick)
+    assume DISCRETE feature vectors — the reference shares the assumption
     silently; here a continuous column (e.g. a gauss similarity) would
-    make unique-vector count ~ pair count and the collect would OOM the
-    driver. One cheap approx_count_distinct over the feature struct
-    gates the collect."""
-    est = features.agg(
-        F.approx_count_distinct(F.struct(*cols)).alias("n")
-    ).collect()[0]["n"]
-    if est > max_unique:
+    make the unique-vector count ~ pair count and the collect would OOM
+    the driver. The gate is a BOUNDED collect (limit max_unique+1): the
+    aggregation itself is distributed and spills gracefully, and the limit
+    caps driver transfer either way, so the gate costs no job of its own.
+    Sorting makes every fit independent of the order in which the
+    aggregate's partitions come back (AQE coalescing, input
+    partitioning): the numpy sums then run in one fixed order."""
+    rows = agg.limit(max_unique + 1).collect()
+    if len(rows) > max_unique:
         raise ValueError(
-            f"driver-side fit needs discrete feature vectors: ~{est} unique "
-            f"vectors across {cols} (> {max_unique}). Bin continuous "
+            f"driver-side fit needs discrete feature vectors: more than "
+            f"{max_unique} unique vectors across {cols}. Bin continuous "
             "similarities (e.g. F.round(col, 2)) before fitting."
         )
-
-
-def _guarded_collect(agg: DataFrame, cols: list[str],
-                     max_unique: int = 100_000) -> list:
-    """Gate-and-collect a unique-vector aggregate in ONE scan of the
-    features. The old shape ran ``_guard_discrete`` (an
-    approx_count_distinct aggregation — a full scan of the feature frame)
-    and THEN the groupBy aggregation (a second full scan). The
-    aggregation itself is distributed and spills gracefully — the only
-    driver hazard is the unbounded ``collect()`` — so persist the
-    aggregate, gate on its exact row count (cheap: reads the cached
-    handful of rows), and collect from cache. Same fail-fast contract,
-    one feature scan instead of two, and the collected rows come from
-    the identical aggregation (same partitioning, same order)."""
-    agg = agg.persist()
-    try:
-        n = agg.count()
-        if n > max_unique:
-            raise ValueError(
-                f"driver-side fit needs discrete feature vectors: {n} unique "
-                f"vectors across {cols} (> {max_unique}). Bin continuous "
-                "similarities (e.g. F.round(col, 2)) before fitting."
-            )
-        return agg.collect()
-    finally:
-        agg.unpersist()
+    keys = [c for c in agg.columns if c != "count"]
+    X = np.array([[float(r[c]) for c in keys] for r in rows]).reshape(
+        len(rows), len(keys)
+    )
+    wts = np.array([float(r["count"]) for r in rows])
+    # lexsort's LAST key is the primary one: reverse so X[:, 0] leads
+    order = np.lexsort(X.T[::-1])
+    return X[order], wts[order]
 
 
 def _collect_labeled_stats(features: DataFrame, truth: DataFrame,
@@ -180,17 +166,14 @@ def _collect_labeled_stats(features: DataFrame, truth: DataFrame,
         truth.select(PAIR).distinct().withColumn("_y", F.lit(1)), PAIR, "left"
     ).fillna({"_y": 0})
     # 2 * max_unique: every unique feature vector appears at most once per
-    # label value — same discreteness gate as _guard_discrete, fused into
-    # the aggregation (one feature scan instead of two, _guarded_collect)
-    grouped = _guarded_collect(
+    # label value
+    Xy, wts = _guarded_collect(
         labeled.groupBy(*cols, "_y").count(), cols, max_unique=200_000
     )
-    if not any(r["_y"] == 1 for r in grouped):
+    y = Xy[:, -1]
+    if not (y == 1).any():
         raise ValueError("training data has zero matches (base.py:916-922)")
-    X = np.array([[float(r[c]) for c in cols] for r in grouped])
-    y = np.array([float(r["_y"]) for r in grouped])
-    wts = np.array([float(r["count"]) for r in grouped])
-    return X, y, wts
+    return Xy[:, :-1], y, wts
 
 
 def _check_coefficients(coefficients, cols: list[str]) -> None:
@@ -384,11 +367,9 @@ class ECMClassifier(BaseClassifier, _NBModel):
 
     def fit(self, features: DataFrame, truth: DataFrame | None = None):
         self._cols = _feature_cols(features)
-        grouped = _guarded_collect(
+        X_unique, freq = _guarded_collect(
             features.groupBy(*self._cols).count(), self._cols
         )
-        X_unique = np.array([[float(r[c]) for c in self._cols] for r in grouped])
-        freq = np.array([float(r["count"]) for r in grouped])
         n_total = freq.sum()
         self.classes_list = _binarizers(X_unique)
         X_bin = _binarize(X_unique, self.classes_list)

@@ -485,9 +485,15 @@ class Compare:
         # the round-robin spread LOSING to the single-task kernels — the
         # .rdd partition probe compiles the physical plan per call and
         # the extra exchange costs more than the Arrow-kernel parallelism
-        # buys at this size; large pair frames arrive multi-partition
-        # anyway. Callers with a huge single-partition pair frame should
-        # repartition it themselves.
+        # buys at this size. Re-measured at rlbench person_link's shape
+        # (35k pinned pairs in one partition, local[4] on 4 vCPUs):
+        # spreading them to 4 tasks left the pandas-UDF stage flat (median
+        # of 6: 0.68 s one task, 0.67 s four) and pin + count at 1.42 vs
+        # 1.41 s; a separate measurement of the same spread read the stage
+        # at 0.58 -> 0.80 s. Each Python task pays a fixed start cost that
+        # the split does not win back at this size. Large pair frames
+        # arrive multi-partition anyway; callers with a huge
+        # single-partition pair frame should repartition it themselves.
         aligned = pairs.select("id_1", "id_2").join(left, "id_1").join(right, "id_2")
 
         labels = self._labels()

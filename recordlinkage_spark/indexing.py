@@ -9,10 +9,10 @@ candidate pairs; dedup mode keeps the strict lower triangle
 Spark design: a pair is a row ``(id_1, id_2)``; dedup canonical ordering is
 ``id_1 > id_2`` (set-equivalent to the reference's positional lower
 triangle). Each pass is one lazy DataFrame expression — Block is a shuffled
-equi-join, SNI is dense-rank + offset-explode turning the band join into
-``window`` equi-joins (the reference's own trick at index.py:318-330, which
-Catalyst would otherwise nested-loop), Full is a cross join, Random is a
-seeded draw of pair codes mapped through the closed-form triangular inverse
+equi-join, SNI turns the band join (which Catalyst would otherwise
+nested-loop) into two equi-joins through a neighbour-key table built over
+the distinct sort keys, Full is a cross join, Random is a seeded draw of
+pair codes mapped through the closed-form triangular inverse
 (recordlinkage/algorithms/indexing.py:8-17).
 
 Scale notes (10^12 docs): Block/SNI/Full are parity/test passes; the
@@ -132,12 +132,15 @@ class SortedNeighbourhood(BaseIndexAlgorithm):
     (window-1)/2; optional extra exact blocking keys. Window must be odd
     (index.py:263-264); null keys dropped (index.py:292-299).
 
-    Spark: the global key ranking is a dense_rank over the *distinct union
-    of keys* (small cardinality — this is the only global sort and it sorts
-    keys, not rows). The band join |rank_l - rank_r| <= w2 is rewritten as
-    ``explode(sequence(-w2, w2))`` + equi-join on ``rank + offset`` — the
-    reference's own lagged-merge rewrite (index.py:318-330), which Catalyst
-    does not do automatically (SURVEY.md §4).
+    Spark: the band join |rank_l - rank_r| <= w2 (SURVEY.md §4) becomes a
+    neighbour-key table ``(_snk, _nbk)``: one window over the *distinct
+    union of keys* collects, for each key, the keys up to w2 places before
+    and after it in sort order (small cardinality — this is the only global
+    sort and it sorts keys, not rows). Left rows then join it on ``_snk``
+    and right rows join on ``_nbk`` plus the block keys — two distributed
+    equi-joins, with no rank column carried through the rows. Same pair
+    set as the reference's lagged merge over dense ranks
+    (index.py:318-330).
     """
 
     def __init__(
@@ -166,7 +169,7 @@ class SortedNeighbourhood(BaseIndexAlgorithm):
             else (block_right_on or list(block_on))
         )
 
-    def _ranked(self, df: DataFrame, key: str, id_col: str, blocks, side: str):
+    def _keyed(self, df: DataFrame, key: str, id_col: str, blocks, side: str):
         cols = [F.col(id_col).alias(f"id_{side}"), F.col(key).alias("_snk")]
         cols += [F.col(c).alias(f"_blk_{i}") for i, c in enumerate(blocks)]
         out = df.select(*cols).filter(F.col("_snk").isNotNull())
@@ -176,39 +179,31 @@ class SortedNeighbourhood(BaseIndexAlgorithm):
 
     def _link_index(self, df_a: DataFrame, df_b: DataFrame, id_col: str) -> DataFrame:
         w2 = (self.window - 1) // 2
-        left = self._ranked(df_a, self.left_on, id_col, self.block_left_on, "1")
-        right = self._ranked(df_b, self.right_on, id_col, self.block_right_on, "2")
-        # Global dense rank over the distinct union of sort-key values
-        # (reference index.py:249-253,303-313 factorizes over the same union).
-        # The unpartitioned window funnels the distinct-key table through
-        # ONE task — acceptable here because SNI is a linkage parity pass
-        # over person-scale key domains (module header: the web-scale
-        # passes are minhash/simhash/suffix); a corpus-scale sort key
-        # does not belong in this indexer.
-        keys = (
+        left = self._keyed(df_a, self.left_on, id_col, self.block_left_on, "1")
+        right = self._keyed(df_b, self.right_on, id_col, self.block_right_on, "2")
+        # Neighbour-key table over the distinct union of sort-key values
+        # (reference index.py:249-253 factorizes over the same union): each
+        # key with every key at most w2 places away in sort order, itself
+        # included. The unpartitioned window funnels the distinct-key table
+        # through ONE task — acceptable here because SNI is a linkage
+        # parity pass over person-scale key domains (module header: the
+        # web-scale passes are minhash/simhash/suffix); a corpus-scale sort
+        # key does not belong in this indexer. Records never enter it.
+        near = Window.orderBy("_snk").rowsBetween(-w2, w2)
+        neighbours = (
             left.select("_snk")
             .union(right.select("_snk"))
             .distinct()
-            .withColumn("_rank", F.dense_rank().over(Window.orderBy("_snk")))
+            .withColumn("_nbk", F.collect_list("_snk").over(near))
+            .withColumn("_nbk", F.explode("_nbk"))
         )
-        left = left.join(keys, on="_snk").drop("_snk")
-        right = right.join(keys, on="_snk").drop("_snk")
-        # Band join as w equi-joins: explode offsets on the left side.
-        left = left.withColumn(
-            "_off", F.explode(F.sequence(F.lit(-w2), F.lit(w2)))
-        ).withColumn("_rank", F.col("_rank") + F.col("_off")).drop("_off")
-        on = [left["_rank"] == right["_rank"]]
-        for i in range(len(self.block_left_on)):
-            on.append(left[f"_blk_{i}"] == right[f"_blk_{i}"])
-        cond = on[0]
-        for c in on[1:]:
-            cond = cond & c
-        return left.join(right, cond, "inner").select("id_1", "id_2")
-
-    def _dedup_index(self, df_a: DataFrame, id_col: str) -> DataFrame:
-        pairs = self._link_index(df_a, df_a, id_col)
-        return pairs.filter(F.col("id_1") > F.col("id_2")).dropDuplicates(
-            ["id_1", "id_2"]
+        blocks = [f"_blk_{i}" for i in range(len(self.block_left_on))]
+        # one (key, neighbour) row per key pair, so with unique ids every
+        # record pair appears once: dedup mode needs only id_1 > id_2
+        return (
+            left.join(neighbours, "_snk")
+            .join(right.withColumnRenamed("_snk", "_nbk"), ["_nbk", *blocks])
+            .select("id_1", "id_2")
         )
 
 
@@ -230,7 +225,7 @@ class NeighbourhoodBlock(BaseIndexAlgorithm):
 
     Spark design (the reference's recursive block-coarsening is a
     single-node pruning trick — SURVEY.md §4): candidate generation is the
-    UNION over fields of SNI-style rank-window equi-joins (explode offsets
+    UNION over fields of rank-window equi-joins (explode offsets
     -w2..w2, join on rank+offset), i.e. every pair that MATCHES at least
     one field; a verification join against both rank vectors then applies
     the exact accept rule. Whenever max_nulls + max_non_matches >= n_keys
@@ -346,12 +341,6 @@ class NeighbourhoodBlock(BaseIndexAlgorithm):
             >= F.lit(n - self.max_non_matches)
         )
         return j.filter(accept).select("id_1", "id_2")
-
-    def _dedup_index(self, df_a: DataFrame, id_col: str) -> DataFrame:
-        pairs = self._link_index(df_a, df_a, id_col)
-        return pairs.filter(F.col("id_1") > F.col("id_2")).dropDuplicates(
-            ["id_1", "id_2"]
-        )
 
 
 def _tri_inverse(codes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -154,9 +154,10 @@ def test_supervised_requires_matches(spark, vectors):
 
 def test_continuous_features_fail_fast(spark):
     """Driver-side fits must refuse continuous feature columns instead of
-    collecting ~n_pairs unique vectors (classifiers._guard_discrete)."""
+    collecting ~n_pairs unique vectors (classifiers._guarded_collect)."""
     import pandas as pd
-    from recordlinkage_spark.classifiers import ECMClassifier
+
+    from recordlinkage_spark.classifiers import _guarded_collect
 
     rng = np.random.RandomState(3)
     n = 5000
@@ -169,14 +170,47 @@ def test_continuous_features_fail_fast(spark):
         }
     )
     feats = spark.createDataFrame(pdf)
-    # the fit path calls _guard_discrete before the collect; drive the
-    # guard at a low threshold to assert it fires on continuous columns
-    from recordlinkage_spark.classifiers import _guard_discrete
-
+    # every fit collects through _guarded_collect; drive it at a low
+    # threshold to assert it fires on continuous columns
     with pytest.raises(ValueError, match="discrete feature vectors"):
-        _guard_discrete(feats, ["f1", "f2"], max_unique=1000)
+        _guarded_collect(feats.groupBy("f1", "f2").count(), ["f1", "f2"],
+                         max_unique=1000)
     # discrete columns pass
-    _guard_discrete(feats.select("id_1", "id_2", "f2"), ["f2"], max_unique=1000)
+    X, wts = _guarded_collect(feats.groupBy("f2").count(), ["f2"],
+                              max_unique=1000)
+    assert X.shape == (2, 1) and wts.sum() == n
+
+
+def test_fits_independent_of_partitioning(vectors):
+    """The collected unique-vector rows are sorted on the driver, so the
+    same features at 1 and 16 partitions fit bit-identical parameters."""
+    features, truth = vectors
+    one, many = features.coalesce(1), features.repartition(16)
+    e1, e16 = ECMClassifier().fit(one), ECMClassifier().fit(many)
+    assert np.array_equal(e1.class_log_prior_, e16.class_log_prior_)
+    assert np.array_equal(e1.feature_log_prob_, e16.feature_log_prob_)
+    assert e1.n_iter_ == e16.n_iter_
+    n1 = NaiveBayesClassifier().fit(one, truth)
+    n16 = NaiveBayesClassifier().fit(many, truth)
+    assert np.array_equal(n1.class_log_prior_, n16.class_log_prior_)
+    assert np.array_equal(n1.feature_log_prob_, n16.feature_log_prob_)
+
+
+def test_ecm_fit_runs_at_most_two_jobs(spark, vectors):
+    """The fit's only Spark work is the unique-vector aggregate and its
+    bounded collect: no persist, count or second scan."""
+    features, _ = vectors
+    features = features.cache()
+    features.count()
+    sc = spark.sparkContext
+    group = "ecm-fit-jobs"
+    sc.setJobGroup(group, "ECM fit")
+    try:
+        ECMClassifier().fit(features)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        features.unpersist()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_svm_squared_hinge_is_stationary(vectors):

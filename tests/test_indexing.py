@@ -1,6 +1,7 @@
 """Closed-form pair-count tests, ported from the reference test strategy
 (tests/test_indexing.py:341-365,421-463,510-546; SURVEY.md §5.1)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,6 +87,61 @@ def test_sni_dedup(idx_frames):
     # dedup with distinct arange keys, window 3: each adjacent rank pair once
     got = SortedNeighbourhood("var_arange", window=3).index(a).count()
     assert got == 99
+
+
+def _sni_oracle(a, b, window, block):
+    """Brute-force SNI in pandas: pairs whose dense ranks over the distinct
+    non-null sort keys (of both frames in link mode) differ by at most
+    (window-1)/2, with equal non-null block keys."""
+    dedup = b is None
+    b = a if dedup else b
+    keys = sorted(set(a["k"].dropna()) | set(b["k"].dropna()))
+    rank = {k: r for r, k in enumerate(keys)}
+    w2 = (window - 1) // 2
+    out = set()
+    for ra in a.itertuples():
+        for rb in b.itertuples():
+            if ra.k is None or rb.k is None or abs(rank[ra.k] - rank[rb.k]) > w2:
+                continue
+            if block and (ra.b is None or rb.b is None or ra.b != rb.b):
+                continue
+            if dedup and ra.id <= rb.id:
+                continue
+            out.add((ra.id, rb.id))
+    return out
+
+
+@pytest.mark.parametrize("mode", ["dedup", "link"])
+@pytest.mark.parametrize("block", [False, True])
+def test_sni_matches_bruteforce_oracle(spark, mode, block):
+    """SNI pair sets equal the brute-force oracle over repeated and null
+    sort keys, windows 1/3/5, with and without ``block_on``."""
+    import pandas as pd
+
+    rng = np.random.RandomState(11)
+
+    def frame(ids, key_values):
+        pdf = pd.DataFrame({
+            "id": ids,
+            "k": [None if rng.rand() < 0.15 else str(rng.choice(key_values))
+                  for _ in ids],
+            "b": [None if rng.rand() < 0.1 else int(rng.randint(0, 3))
+                  for _ in ids],
+        }).astype(object)
+        return pdf, spark.createDataFrame(pdf, "id long, k string, b long")
+
+    # overlapping but different key domains, each value repeated
+    pa, da = frame(list(range(60)), [f"k{i:02d}" for i in range(0, 14)])
+    pb, db = frame(list(range(100, 150)), [f"k{i:02d}" for i in range(8, 20)])
+    if mode == "dedup":
+        pb, db = None, None
+    for window in (1, 3, 5):
+        sni = SortedNeighbourhood("k", window=window,
+                                  block_on="b" if block else None)
+        got = sni.index(da, db).collect()
+        pairs = {(r["id_1"], r["id_2"]) for r in got}
+        assert len(pairs) == len(got), f"duplicate pairs at window={window}"
+        assert pairs == _sni_oracle(pa, pb, window, block), f"window={window}"
 
 
 def test_sni_even_window_rejected():

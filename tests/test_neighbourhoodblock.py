@@ -91,3 +91,19 @@ def test_nb_link_mode(spark, frame):
     # 1 matches 101 on both keys; 102's null k1 wildcards but k3=q matches nothing
     assert (1, 101) in got
     assert all(p[1] != 102 for p in got)
+
+
+def test_nb_repeated_key_values_give_unique_pairs(spark):
+    """Heavily repeated key values: every pair comes out once, with no
+    dropDuplicates after the accept-rule join."""
+    rows = [(i, f"v{i % 3}", i % 4, None if i % 5 == 0 else f"w{i % 2}")
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, k1 string, k2 long, k3 string")
+    for nb in (
+        NeighbourhoodBlock(["k1", "k2"], windows=[3, 1], max_non_matches=1),
+        NeighbourhoodBlock(["k1", "k3"], max_nulls=1),
+    ):
+        pairs = nb.index(df, id_col="id")
+        n = pairs.count()
+        assert n > 0
+        assert n == pairs.distinct().count()
