@@ -26,7 +26,6 @@ class EngineConfig:
     lsh_bands: int = 32          # b bands -> s-curve threshold ~ (1/b)^(1/r)
     lsh_rows: int = 4            # r rows per band
     shingle_size: int = 3        # word n-gram size for shingling
-    char_shingles: bool = False  # char n-grams instead of word n-grams
     # Cap on LSH bucket size: webtext boilerplate produces mega-buckets that
     # would explode quadratically; buckets above the cap are DROPPED by the
     # streaming pair expander, and the pipeline counts drops via a Spark
@@ -47,11 +46,6 @@ class EngineConfig:
     # minhash.cap_pair_degree and BENCH/BASELINE.md round 5.
     max_verify_degree: int | None = None
 
-    # --- SimHash ----------------------------------------------------------
-    simhash_bits: int = 64
-    simhash_hamming_k: int = 3   # max Hamming distance for a candidate pair
-    simhash_blocks: int = 4      # prefix blocks; catches hamming <= blocks-1
-
     # --- fingerprint substring pass (suffix-array equivalent) --------------
     span_tokens: int = 32        # fingerprint window length (tokens)
     winnow_window: int = 19      # winnowing window; guarantees spans >= 32+19-1=50
@@ -71,16 +65,13 @@ class EngineConfig:
     iceberg_namespace: str = field(default_factory=lambda: os.environ.get(
         "SPARK_GRAFT_ICEBERG_NS", "dedup"))
 
-    # --- shuffle / skew -----------------------------------------------------
+    # --- shuffle ------------------------------------------------------------
     shuffle_partitions: int = field(default_factory=lambda: int(
         os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))
-    salt_buckets: int = 16       # salting factor for hot band keys
 
     # --- classifier ---------------------------------------------------------
     ecm_max_iter: int = 100
     ecm_atol: float = 1e-4
-
-    extra_spark_conf: dict = field(default_factory=dict)
 
     @classmethod
     def for_threshold(

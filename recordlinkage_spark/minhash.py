@@ -5,12 +5,15 @@ Block/SortedNeighbourhood as the blocking stage for 10^12-doc webtext.
 
 Plan shape (all lazy, one pipeline):
 
-  docs --JVM--> distinct shingles -> xxhash64 per shingle (array<bigint>)
-       --pandas UDF (numpy, Arrow)--> k MinHash mins -> b band hashes
-       --posexplode--> (band_id, band_hash, id)
-       --bucket-size cap (skew!)--> self-join on (band_id, band_hash)
-       --id_1 > id_2, dropDuplicates--> candidate pairs
-       --JVM array_intersect/union on shingle hashes--> exact Jaccard verify
+  docs --pandas UDF (numpy, Arrow)--> tokens -> word-gram hashes
+       -> k MinHash mins -> b band-index-salted band hashes
+          (+ winnowed fingerprints and the 32-bit shingle set when the
+          full signature frame is built: _signature_frame)
+       --explode, top 32 bits--> (id, band_key int)   [_band_rows]
+       --one shuffle on band_key, per-partition sort, capped Arrow
+         expander (skew!)--> (id_1 > id_2) candidate pairs   [bucket_pairs]
+          (a batch against a stored band table: pairs_against_bands)
+       --JVM array_intersect/union on shingle sets--> exact Jaccard verify
 
 Skew handling (north_rule): webtext boilerplate produces mega-buckets that
 would explode quadratically in the self-join. Buckets larger than
@@ -31,6 +34,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from recordlinkage_spark import textfns
 from recordlinkage_spark.caching import pin
+from recordlinkage_spark.config import EngineConfig
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio mix constant
 
@@ -84,7 +88,7 @@ def _bands_from_segments(
         d0 = d1
     # combine r rows per band with a mixed polynomial hash; salt each band
     # with its index so band hashes are globally unique keys — downstream
-    # bucketing joins on the hash ALONE (no band_id column in the shuffle;
+    # bucketing joins on the hash ALONE (no band-index column in the shuffle;
     # cross-band bucket merges need a 64-bit collision, ~1e-11 per pair)
     band = sig.reshape(bands, rows, -1)
     acc = np.zeros((bands, band.shape[2]), dtype=np.uint64)
@@ -94,47 +98,6 @@ def _bands_from_segments(
     salt = (np.arange(bands, dtype=np.uint64) * _MIX)[:, None]
     acc ^= salt
     return acc.view(np.int64)
-
-
-def make_band_udf(num_perm: int, bands: int, rows: int, seed: int = 42):
-    """pandas UDF: array<bigint> shingle hashes -> array<bigint> band hashes.
-
-    Signature and banding fused into ONE Arrow pass (SURVEY.md §4.5: fuse
-    multi-output UDFs manually instead of chaining Python stages). Prefer
-    :func:`make_text_band_udf` on the hot path (fuses the shingling too)."""
-    if bands * rows != num_perm:
-        raise ValueError("num_perm must equal bands * rows")
-    a, b = _perm_params(num_perm, seed)
-
-    def batch(hashes: pd.Series) -> pd.Series:
-        np.seterr(over="ignore")  # uint64 wraparound IS the hash arithmetic
-        lengths = np.array([0 if h is None else len(h) for h in hashes], dtype=np.int64)
-        valid = lengths > 0
-        if not valid.any():
-            return pd.Series([None] * len(hashes))
-        flat = np.concatenate(
-            [np.asarray(h, dtype=np.int64) for h, v in zip(hashes, valid) if v]
-        ).view(np.uint64)
-        offsets = np.zeros(int(valid.sum()), dtype=np.int64)
-        np.cumsum(lengths[valid][:-1], out=offsets[1:])
-        acc_i64 = _bands_from_segments(
-            flat, offsets, a, b, num_perm, bands, rows
-        )
-        out: list = []
-        vi = 0
-        for v in valid:
-            if v:
-                out.append(acc_i64[:, vi].tolist())
-                vi += 1
-            else:
-                out.append(None)
-        return pd.Series(out)
-
-    # asNondeterministic stops Catalyst from duplicating the UDF when a
-    # filter (incl. the size>0 inferred for posexplode) is pushed below the
-    # repartition Exchange — otherwise the signature pass runs TWICE, once
-    # on the unpartitioned input.
-    return F.pandas_udf(batch, ArrayType(LongType())).asNondeterministic()
 
 
 def make_text_band_udf(
@@ -148,13 +111,16 @@ def make_text_band_udf(
     lambdas) are interpreted, not codegen'd: post-bind_once the JVM
     shingle+hash stage alone measures 2.0x the Arrow pass (see the textfns
     module docstring), and the 128-permutation banding would add 128
-    interpreted lambda evaluations per shingle on top. Null text -> null."""
+    interpreted lambda evaluations per shingle on top. Null text -> null.
+
+    The band-only twin of :func:`make_signature_udf` (bit-identical
+    bands, about half its kernel time): callers that only bucket use it."""
     if bands * rows != num_perm:
         raise ValueError("num_perm must equal bands * rows")
     a, b = _perm_params(num_perm, seed)
 
     def batch(texts: pd.Series) -> pd.Series:
-        np.seterr(over="ignore")
+        np.seterr(over="ignore")  # uint64 wraparound IS the hash arithmetic
         flat, lengths, isna = textfns.flat_token_hashes_np(texts)
         # zero-token docs (empty/whitespace-only) are dropped like nulls:
         # they would otherwise all share gram [0] -> one global bucket of
@@ -169,6 +135,10 @@ def make_text_band_udf(
             dtype=object,
         )
 
+    # asNondeterministic stops Catalyst from duplicating the UDF when a
+    # filter (incl. one inferred for explode) is pushed below the
+    # repartition Exchange — otherwise the signature pass runs TWICE, once
+    # on the unpartitioned input.
     return F.pandas_udf(batch, ArrayType(LongType())).asNondeterministic()
 
 
@@ -223,21 +193,37 @@ def make_signature_udf(
     ).asNondeterministic()
 
 
-def make_shingle_array_udf(shingle_size: int):
-    """pandas UDF: raw text -> array<bigint> DISTINCT shingle hashes — the
-    verify-stage shingle table (exact Jaccard runs JVM-side on these
-    arrays). Hash scheme is identical to :func:`make_text_band_udf`, so the
-    candidate and verify stages agree bit-for-bit."""
+def _signature_frame(
+    records: DataFrame, cfg: EngineConfig, id_col: str, text_col: str
+) -> DataFrame:
+    """THE signature frame ``(id, bands, fps, sh)``: ONE tokenize+hash
+    Arrow pass (:func:`make_signature_udf`) emits all three per-doc
+    signatures. ``DedupPipeline.run`` and ``run_incremental`` build their
+    signature stages with it and :meth:`MinHashLSH.verified_pairs` signs
+    through it — one copy, so every path signs and verifies identically
+    (the incremental flow's bit-for-bit equivalence with the full run
+    depends on it). Null ids are dropped: they cannot take part in
+    id-keyed dedup, and such rows stay visible in the caller's input."""
+    df = textfns.spread_small_input(records)
+    udf = make_signature_udf(
+        cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows, cfg.shingle_size,
+        cfg.span_tokens, cfg.winnow_window,
+    )
+    return df.filter(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("id"), udf(F.col(text_col)).alias("_sig")
+    ).select("id", "_sig.*")
 
-    def batch(texts: pd.Series) -> pd.Series:
-        np.seterr(over="ignore")
-        flat, lengths, isna = textfns.flat_token_hashes_np(texts)
-        isna = isna | (lengths == 0)  # drop empty docs like nulls (ADVICE r01)
-        grams, counts = textfns.gram_hashes_np(flat, lengths, shingle_size)
-        grams, counts = textfns.distinct_per_doc_np(grams, counts)
-        return textfns.segments_to_series(grams, counts, isna)
 
-    return F.pandas_udf(batch, ArrayType(LongType())).asNondeterministic()
+def _band_rows(sig: DataFrame) -> DataFrame:
+    """THE bucket-row format ``(id, band_key int)``, one row per band of
+    every signed doc, from any frame with ``(id, bands)``: the signature
+    frame, or :meth:`MinHashLSH.bands_table`'s band-only frame. Every
+    MinHash caller pairs these rows through :func:`bucket_pairs` or
+    :func:`pairs_against_bands`; band hashes are band-index-salted, so the
+    key needs no band index (see :func:`band_key_expr`)."""
+    return sig.select("id", F.explode("bands").alias("_bh")).select(
+        "id", band_key_expr("_bh").alias("band_key")
+    )
 
 
 def _segment_pair_idx(sizes: np.ndarray):
@@ -278,7 +264,7 @@ def segment_pairs_np(ids: np.ndarray, sizes: np.ndarray):
     return np.maximum(x, y), np.minimum(x, y)
 
 
-def _make_bucket_pair_expander(cap: int, key_cols: tuple[str, ...] = ("band_id", "band_hash"),
+def _make_bucket_pair_expander(cap: int, key_cols: tuple[str, ...],
                                dropped_acc=None,
                                payload_cols: tuple[str, ...] = ()):
     """mapInPandas function over (id, *key_cols) rows that are
@@ -385,9 +371,10 @@ def _make_bucket_pair_expander(cap: int, key_cols: tuple[str, ...] = ("band_id",
 
 def band_key_expr(band_hash_col) -> Column:
     """THE band bucket key: top 32 bits of the (band-index-salted) band
-    hash, cast to int. One definition on purpose — run-time bucketing
-    (candidate_pairs), the incremental band store, the batch-vs-store
-    join, and truncation_metrics must key identically or the metrics
+    hash, cast to int, applied in one place (:func:`_band_rows`) on
+    purpose — run-time bucketing (candidate_pairs), the incremental band
+    store, the batch-vs-store join, the streaming store, and
+    truncation_metrics must key identically or the metrics
     describe buckets the run never used and stores stop matching
     batches. A truncation collision only ADDS candidates the verify
     stage discards."""
@@ -403,7 +390,10 @@ def bucket_pairs(rows: DataFrame, key_cols: list[str], cap: int,
     Arrow pair expansion (see _make_bucket_pair_expander), then distinct.
     Shared by the MinHash/LSH, SimHash, winnowing-fingerprint and
     embedding-LSH passes. Pass a Spark accumulator as ``dropped_acc`` to
-    count dropped oversize buckets (skew observability).
+    count dropped oversize buckets (skew observability). Rows with a null
+    id are dropped first: the expander cannot canonicalize them (numpy's
+    max over None raises), and a pair with an unidentifiable doc would
+    mean nothing.
 
     ``payload`` ({column: spark_type}): small per-row values carried
     through the expansion as ``<col>_1``/``<col>_2`` — a caller that
@@ -425,7 +415,8 @@ def bucket_pairs(rows: DataFrame, key_cols: list[str], cap: int,
     # every bucket stays contiguous within one task — the expander's
     # contract is unchanged (measured: identical pair sets, ~0.3 s less
     # fixed overhead per call at bench scale).
-    grouped = rows.repartition(*key_cols).sortWithinPartitions(*key_cols)
+    grouped = (rows.filter(F.col("id").isNotNull())
+               .repartition(*key_cols).sortWithinPartitions(*key_cols))
     payload = payload or {}
     expand = _make_bucket_pair_expander(cap, tuple(key_cols), dropped_acc,
                                         payload_cols=tuple(payload))
@@ -524,14 +515,16 @@ def pairs_against_bands(
     semi-joined to the batch's distinct keys first, so it never shuffles
     in full (partition-pruned when the store is bucketed on band_key).
     Keys whose COMBINED (new + store) bucket exceeds ``max_bucket_size``
-    are dropped from the cross join (boilerplate protection; the combined
-    cap matches ``streaming.foreach_batch_dedup`` — per-side caps would
-    still let a key at the cap on BOTH sides expand to ~cap^2 pairs,
-    ADVICE r4). Key-column dtype is caller's
+    are dropped from the cross join (boilerplate protection — per-side
+    caps would still let a key at the cap on BOTH sides expand to ~cap^2
+    pairs); within-batch pairs of such a key survive while the
+    batch side alone is under the cap. Key-column dtype is caller's
     choice — the LSH path uses 32-bit int band keys, the winnowing path
     64-bit fingerprints renamed to ``band_key``.
 
-    Core of :meth:`MinHashLSH.candidate_pairs_against`, also driven by
+    THE batch-vs-store pairer: core of
+    :meth:`MinHashLSH.candidate_pairs_against` and
+    ``streaming.foreach_batch_dedup``, also driven by
     ``DedupPipeline.run_incremental`` directly over persisted signature
     stages (no re-signing of the store). Returns distinct canonical
     (id_1 > id_2) pairs where at least one side is a new id.
@@ -581,8 +574,8 @@ def pairs_against_bands(
     touched = pin(store_bands.join(keys, "band_key"))
     sizes = touched.groupBy("band_key").agg(F.count("*").alias("_n"))
     # combined cap: the store side of a key plus the batch rows that will
-    # join it must fit in one bucket (streaming.foreach_batch_dedup's
-    # rule). sizes' keys are a subset of new_sizes' keys, so inner join.
+    # join it must fit in one bucket. sizes' keys are a subset of
+    # new_sizes' keys, so inner join.
     hot_keys = (
         sizes.join(new_sizes, "band_key")
         .filter(F.col("_n") + F.col("_nn") > max_bucket_size)
@@ -783,17 +776,13 @@ class MinHashLSH:
         bands: int = 32,
         rows: int = 4,
         shingle_size: int = 3,
-        char_level: bool = False,
         max_bucket_size: int = 2000,
-        seed: int = 42,
     ):
         if bands * rows != num_perm:
             raise ValueError("num_perm must equal bands * rows")
         self.num_perm, self.bands, self.rows = num_perm, bands, rows
         self.shingle_size = shingle_size
-        self.char_level = char_level
         self.max_bucket_size = max_bucket_size
-        self.seed = seed
         self.metrics: dict = {}
 
     @classmethod
@@ -823,56 +812,30 @@ class MinHashLSH:
         return idx
 
     # ------------------------------------------------------------------
-    def with_shingles(self, df: DataFrame, text_col: str, out: str = "_sh") -> DataFrame:
-        if self.char_level:
-            return df.withColumn(
-                out,
-                textfns.shingle_hashes(
-                    textfns.char_shingles(F.col(text_col), self.shingle_size)
-                ),
-            )
-        # fused tokenize+hash+shingle in one Arrow pass (see textfns module
-        # docstring: interpreted JVM lambda expressions are ~35x slower)
-        udf = make_shingle_array_udf(self.shingle_size)
-        return df.withColumn(out, udf(F.col(text_col)))
-
     def bands_table(self, df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        """(id, band_id, band_hash) — one row per non-null, non-empty doc
-        per band (zero-token docs are excluded from all dedup signatures,
-        like nulls).
+        """``(id, band_key)`` bucket rows (:func:`_band_rows`) — one row
+        per non-null, non-empty doc per band (zero-token docs are excluded
+        from all dedup signatures, like nulls), signed by the band-only
+        kernel. This is the store format :meth:`candidate_pairs_against`
+        pairs a new batch against.
 
         Repartitions the input when it arrives in fewer partitions than the
         cluster has parallelism AND is big enough for the exchange to pay
         off (a single large parquet file otherwise pins the whole
         signature pass to ONE task; a toy input is cheaper unspread —
         textfns.spread_small_input)."""
-        df = textfns.spread_small_input(df)
-        if self.char_level:
-            udf = make_band_udf(self.num_perm, self.bands, self.rows, self.seed)
-            sig_col = udf(
-                textfns.shingle_hashes(
-                    textfns.char_shingles(F.col(text_col), self.shingle_size)
-                )
-            )
-        else:
-            udf = make_text_band_udf(
-                self.num_perm, self.bands, self.rows, self.shingle_size, self.seed
-            )
-            sig_col = udf(F.col(text_col))
-        sig = (
-            df.select(F.col(id_col).alias("id"), sig_col.alias("_bands"))
-            .filter(F.col("_bands").isNotNull())
+        udf = make_text_band_udf(
+            self.num_perm, self.bands, self.rows, self.shingle_size
         )
-        return sig.select(
-            "id", F.posexplode("_bands").alias("band_id", "band_hash")
-        )
+        return _band_rows(textfns.spread_small_input(df).select(
+            F.col(id_col).alias("id"), udf(F.col(text_col)).alias("bands")
+        ))
 
     def candidate_pairs(self, df: DataFrame, id_col: str, text_col: str,
                         dropped_acc=None) -> DataFrame:
         """Bucket pair generation: ONE shuffle co-locates band rows by
-        (band_id, band_hash), a per-partition sort makes buckets contiguous,
-        and a vectorized Arrow pass expands in-bucket pairs; then one
-        distinct.
+        ``band_key``, a per-partition sort makes buckets contiguous, and a
+        vectorized Arrow pass expands in-bucket pairs; then one distinct.
 
         Why not ``groupBy().collect_list()``: a hash aggregation over
         millions of mostly-singleton group keys costs ~5x the raw shuffle
@@ -886,28 +849,25 @@ class MinHashLSH:
         are dropped (and only ever buffered up to ``max_bucket_size + one
         Arrow batch`` rows thanks to the streaming carry-over), so a
         mega-bucket can neither OOM an executor nor emit O(n^2) pairs. AQE
-        handles residual moderate skew."""
-        # band hashes carry their band index as a salt (see
-        # _bands_from_segments), so the bucket key is the hash alone.
-        # The key ships as the TOP 32 BITS cast to int (shiftright(,32) of
-        # a long is always int-representable, ANSI-safe): halves the key
-        # bytes in the one big shuffle. A 32-bit key collision merely
-        # merges two buckets — it can only ADD candidate pairs, which the
-        # exact-Jaccard verify discards. Cost estimate (corrected r3): at
-        # n = 1e9 band rows the expected number of colliding ROW PAIRS is
-        # ~n^2/2^33 ~ 1e8, i.e. ~1-10% extra verify work depending on
-        # bucket-size distribution — bounded and verify-safe, not free.
-        # Recall tradeoff: a merge that pushes a combined bucket over
-        # max_bucket_size drops ALL of that bucket's true pairs; this
-        # needs a partner bucket of size > cap/2 (rare by construction —
-        # oversize buckets are boilerplate, already dropped) AND a 1/2^32
-        # key collision, so the expected recall loss is O(hot_buckets /
-        # 2^32) per band — negligible next to the LSH miss rate itself.
-        bands = self.bands_table(df, id_col, text_col).select(
-            "id", band_key_expr("band_hash").alias("band_key")
-        )
+        handles residual moderate skew.
+
+        The key is the band hash's TOP 32 BITS as int
+        (:func:`band_key_expr`): it halves the key bytes in the one big
+        shuffle, and a 32-bit key collision merely merges two buckets — it
+        can only ADD candidate pairs, which the exact-Jaccard verify
+        discards. Cost estimate: at n = 1e9 band rows the
+        expected number of colliding ROW PAIRS is ~n^2/2^33 ~ 1e8, i.e.
+        ~1-10% extra verify work depending on bucket-size distribution —
+        bounded and verify-safe, not free. Recall tradeoff: a merge that
+        pushes a combined bucket over max_bucket_size drops ALL of that
+        bucket's true pairs; this needs a partner bucket of size > cap/2
+        (rare by construction — oversize buckets are boilerplate, already
+        dropped) AND a 1/2^32 key collision, so the expected recall loss
+        is O(hot_buckets / 2^32) per band — negligible next to the LSH
+        miss rate itself."""
         id_type = df.schema[id_col].dataType.simpleString()
-        return bucket_pairs(bands, ["band_key"], self.max_bucket_size, id_type,
+        return bucket_pairs(self.bands_table(df, id_col, text_col),
+                            ["band_key"], self.max_bucket_size, id_type,
                             dropped_acc=dropped_acc)
 
     def candidate_pairs_against(
@@ -919,12 +879,13 @@ class MinHashLSH:
         dropped_acc=None,
     ) -> DataFrame:
         """Incremental LSH for recurring crawls: candidates between a NEW
-        batch and an existing signature STORE (a persisted
+        batch and an existing ``(id, band_key)`` STORE (a persisted
         :meth:`bands_table` output), plus within-batch candidates — the
         store is never re-paired against itself, so pairing an ongoing
         crawl costs O(|batch| + touched store rows) per day instead of
         re-running the full corpus join. Batch twin of
-        ``streaming.foreach_batch_dedup``, with the same capped-bucket skew
+        ``streaming.foreach_batch_dedup``; both pair through
+        :func:`pairs_against_bands`, with the same capped-bucket skew
         contract as :meth:`candidate_pairs`.
 
         Scale design (10^12-row store): the store is first semi-joined to
@@ -936,8 +897,6 @@ class MinHashLSH:
         ``dropped_acc`` per matched row group like the batch expander); the
         cross join then broadcasts whichever side AQE finds small.
 
-        ``store_bands`` may carry (id, band_id, band_hash) as written by
-        ``bands_table`` or the compact (id, band_key int) form; both accept.
         Returns distinct (id_1 > id_2) pairs where at least one side is new.
         """
         # localCheckpoint (lazy): pairs_against_bands consumes new_bands
@@ -946,17 +905,10 @@ class MinHashLSH:
         # fused tokenize+sign Arrow UDF would re-run the whole batch ~4x
         # per action (session-8 review fix; run_incremental avoids this
         # by materializing its signature stage first).
-        new_bands = pin(self.bands_table(new_df, id_col, text_col).select(
-            "id", band_key_expr("band_hash").alias("band_key")
-        ))
+        new_bands = pin(self.bands_table(new_df, id_col, text_col))
         id_type = new_df.schema[id_col].dataType.simpleString()
-        store = store_bands
-        if "band_key" not in store.columns:
-            store = store.select(
-                "id", band_key_expr("band_hash").alias("band_key")
-            )
         return pairs_against_bands(
-            new_bands, store, id_type, self.max_bucket_size,
+            new_bands, store_bands, id_type, self.max_bucket_size,
             dropped_acc=dropped_acc,
         )
 
@@ -969,17 +921,24 @@ class MinHashLSH:
         keep_jaccard: bool = True,
     ) -> DataFrame:
         """Candidates + exact Jaccard over distinct shingle-hash sets,
-        filtered at ``threshold``. The verify math is pure JVM
-        (array_intersect / array_union on bigint arrays)."""
-        # eager localCheckpoint: the gather rule may count the candidate
-        # pairs and the broadcast gather reads them twice, in concurrent
-        # broadcast jobs; without a materialized pin each read re-runs
-        # the full signature UDF + shuffle + pair expansion
-        cands = pin(self.candidate_pairs(df, id_col, text_col), eager=True)
-        sh = self.with_shingles(df, text_col).select(
-            F.col(id_col).alias("id"), F.col("_sh")
-        )
-        j = exact_jaccard(cands, sh, threshold)
+        filtered at ``threshold`` — the pipeline's ``verified`` stage:
+        ONE signing pass (:func:`_signature_frame`) yields both the bands
+        and the 32-bit shingle sets, and the verify math is pure JVM
+        (array_intersect / array_union)."""
+        cfg = EngineConfig(num_perm=self.num_perm, lsh_bands=self.bands,
+                           lsh_rows=self.rows, shingle_size=self.shingle_size)
+        # lazy pin: the candidates and the shingle table both read the
+        # signatures, which must not be signed twice
+        sig = pin(_signature_frame(df, cfg, id_col, text_col))
+        id_type = df.schema[id_col].dataType.simpleString()
+        # eager pin: the gather rule may count the candidate pairs and the
+        # broadcast gather reads them twice, in concurrent broadcast jobs;
+        # without a materialized pin each read re-runs the shuffle + pair
+        # expansion
+        cands = pin(bucket_pairs(_band_rows(sig), ["band_key"],
+                                 self.max_bucket_size, id_type), eager=True)
+        j = exact_jaccard(cands, sig.select("id", F.col("sh").alias("_sh")),
+                          threshold)
         cols = ["id_1", "id_2"] + (["jaccard"] if keep_jaccard else [])
         return j.select(*cols)
 
@@ -987,15 +946,12 @@ class MinHashLSH:
         """Eagerly measure bucket-cap truncation (for the metrics table).
 
         Buckets are keyed exactly as ``candidate_pairs`` buckets them —
-        the TRUNCATED 32-bit ``band_key``, not the full (band_id,
-        band_hash): two 64-bit buckets that merge under truncation are
-        one real bucket at run time, and measuring the un-truncated key
-        would report dropped_buckets=0 for a merged bucket the run
-        actually dropped (session-8 review fix)."""
-        bands = self.bands_table(df, id_col, text_col)
-        sizes = bands.groupBy(
-            band_key_expr("band_hash").alias("band_key")
-        ).agg(F.count("*").alias("_n"))
+        the TRUNCATED 32-bit ``band_key`` of :meth:`bands_table`: two
+        64-bit band hashes that merge under truncation are one real bucket
+        at run time, and measuring the un-truncated hash would report
+        dropped_buckets=0 for a merged bucket the run actually dropped."""
+        sizes = self.bands_table(df, id_col, text_col).groupBy(
+            "band_key").agg(F.count("*").alias("_n"))
         row = sizes.agg(
             F.count("*").alias("buckets"),
             F.sum((F.col("_n") > self.max_bucket_size).cast("int")).alias("dropped"),

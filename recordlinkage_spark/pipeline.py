@@ -53,52 +53,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recordlinkage_spark.config import EngineConfig
+from recordlinkage_spark.minhash import _band_rows, _signature_frame
 from recordlinkage_spark.network import ConnectedComponents
 from recordlinkage_spark.caching import pin
-
-
-def _signature_frame(
-    records: DataFrame, cfg: EngineConfig, id_col: str, text_col: str
-) -> DataFrame:
-    """The shared signature-stage builder for run() AND run_incremental():
-    ONE tokenize+hash Arrow pass emits all three per-doc signatures
-    (LSH bands, winnowed fingerprints, distinct shingle set) as
-    ``(id, bands, fps, sh)``. Shared on purpose — the incremental path's
-    bit-for-bit equivalence with the full run (tests/test_incremental_flow)
-    requires the two paths to sign identically, so there is exactly one
-    copy of this logic."""
-    from recordlinkage_spark.minhash import make_signature_udf
-
-    from recordlinkage_spark.textfns import spread_small_input
-
-    df = spread_small_input(records)
-    udf = make_signature_udf(
-        cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows, cfg.shingle_size,
-        cfg.span_tokens, cfg.winnow_window,
-    )
-    # null ids cannot participate in id-keyed dedup: after a recrawl
-    # collapse with null-url passthrough rows (dedup_url_keep_latest),
-    # a null id reaching the bucket expander crashes numpy's pair
-    # canonicalization (np.maximum over None) — and a pair involving an
-    # unidentifiable doc would be meaningless anyway. Such rows stay
-    # visible in the 'collapsed' stage output (session-8 review fix).
-    return df.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("id"), udf(F.col(text_col)).alias("_sig")
-    ).select("id", "_sig.*")
-
-
-def _band_rows(sig: DataFrame) -> DataFrame:
-    """``(id, band_key)`` rows from a signature frame. Band hashes are
-    band-index-salted (minhash._bands_from_segments), so the bucket key is
-    the hash alone; shipping only its top 32 bits as int halves the key
-    bytes of the biggest shuffle, and a key collision only ADDS candidates
-    the verify stage discards. One copy for the same reason as
-    :func:`_signature_frame`."""
-    from recordlinkage_spark.minhash import band_key_expr
-
-    return sig.select("id", F.explode("bands").alias("_bh")).select(
-        "id", band_key_expr("_bh").alias("band_key")
-    )
 
 
 def _partition_rows(files) -> dict[int, int]:

@@ -9,11 +9,15 @@ writeStream contract.
   within a watermark window (state-bounded: Spark evicts fingerprints older
   than the watermark — at 10^12 docs/day unbounded dropDuplicates state
   would OOM; the watermark bounds it).
-- ``streaming_minhash_signatures``: per-microbatch MinHash band signatures
-  (stateless map — the LSH self-join then runs as a periodic batch job over
-  the signature table, the standard lambda design for streaming near-dup).
-- ``foreach_batch_dedup``: a forEachBatch hook that runs the batch LSH pass
-  per micro-batch against the accumulated signature store.
+- ``streaming_minhash_signatures``: per-microbatch MinHash bucket rows
+  ``(id, band_key)`` — the one bucket-row format of the MinHash layer
+  (stateless map — the LSH self-join then runs as a periodic batch job
+  over the signature table, the standard lambda design for streaming
+  near-dup).
+- ``foreach_batch_dedup``: a forEachBatch hook that stores each
+  micro-batch's bucket rows and pairs them against the accumulated store
+  with ``minhash.pairs_against_bands``, the batch-vs-store operator the
+  batch paths use.
 - ``streaming_simhash_neardup``: a CUSTOM STATEFUL operator
   (``applyInPandasWithState``): SimHash-block-keyed state holds the
   recent signatures per bucket (FIFO-capped), every arriving doc emits
@@ -28,7 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from recordlinkage_spark import textfns
-from recordlinkage_spark.minhash import make_text_band_udf
+from recordlinkage_spark.minhash import (_band_rows, make_text_band_udf,
+                                         pairs_against_bands)
 
 
 def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -71,72 +76,73 @@ def streaming_minhash_signatures(
     rows: int = 4,
     shingle_size: int = 3,
 ) -> DataFrame:
-    """Stateless signature extraction on a stream: (id, band_id, band_hash)
-    rows ready to append to the signature table the periodic LSH join scans."""
+    """Stateless signature extraction on a stream: ``(id, band_key int)``
+    rows (``minhash._band_rows``, the bucket-row format every MinHash
+    pairer reads) ready to append to the store :func:`foreach_batch_dedup`
+    keeps."""
     udf = make_text_band_udf(num_perm, bands, rows, shingle_size)
-    sig = stream.select(
-        F.col(id_col).alias("id"), udf(F.col(text_col)).alias("_bands")
-    ).filter(F.col("_bands").isNotNull())
-    return sig.select("id", F.posexplode("_bands").alias("band_id", "band_hash"))
+    return _band_rows(stream.select(
+        F.col(id_col).alias("id"), udf(F.col(text_col)).alias("bands")
+    ))
+
+
+def _overwrite_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` as the ``batch_id`` partition of the parquet table at
+    ``path``, replacing that partition only."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def foreach_batch_dedup(signature_store_path: str, pairs_out_path: str,
                         max_bucket_size: int = 2000):
-    """forEachBatch hook: add the micro-batch's signatures to the store,
-    then join the NEW signatures against the store to emit only pairs
-    involving fresh docs (incremental LSH — no recomputation of old pairs).
+    """forEachBatch hook over ``(id, band_key)`` micro-batches (as
+    :func:`streaming_minhash_signatures` emits them): add the batch's rows
+    to the signature store, then pair them against the rest of the store
+    to emit only pairs involving fresh docs (incremental LSH — no
+    recomputation of old pairs).
 
-    Retry-safe and store-size-independent (session-8 review fixes):
+    Tables, both parquet partitioned by ``batch_id``: the store at
+    ``signature_store_path`` holds ``(id, band_key int, batch_id)``; the
+    output at ``pairs_out_path`` holds canonical ``(id_1 > id_2,
+    batch_id)`` pairs.
 
     - IDEMPOTENT writes: foreachBatch is at-least-once — on failure Spark
       re-invokes ``process`` with the same ``batch_id``. Both outputs are
-      partitioned by ``batch_id`` and written with dynamic partition
-      overwrite, so a retry REPLACES its own partition; a plain append
-      would double the batch's signature rows, pushing bucket counts over
-      the cap early (silently dropping real pairs) and duplicating pair
-      files.
-    - TOUCHED-KEY pruning: the store is joined to the batch's distinct
-      band keys before the bucket-size aggregate, so per-batch work
-      scales with the touched rows, not the accumulated store (the same
-      contract as ``minhash.pairs_against_bands``; at real scale keep the
-      store bucketed/partitioned on the band key so the prune prunes the
-      SCAN too). The cap still counts the key's FULL bucket (store rows
-      include the just-written batch), so semantics match the batch path.
+      written with dynamic partition overwrite, so a retry REPLACES its
+      own partition; a plain append would double the batch's signature
+      rows, pushing bucket counts over the cap early (silently dropping
+      real pairs) and duplicating pair files.
+    - ONE PAIRER: the new side is the store partition just written, read
+      back (the stream's signature UDF is not re-run for each plan
+      branch), the store side every other ``batch_id``, and
+      ``minhash.pairs_against_bands`` pairs them — the same operator as
+      ``MinHashLSH.candidate_pairs_against`` and
+      ``DedupPipeline.run_incremental``. Per-batch work scales with the
+      store rows on the batch's keys, not the accumulated store (at real
+      scale keep the store bucketed on ``band_key`` so the prune prunes
+      the SCAN too). Its edge cases hold here: bucket keys are 32-bit, as
+      in every other path, and the cap is its rule — a key's cross pairs
+      are dropped when the batch and store rows on it together exceed
+      ``max_bucket_size``, while its within-batch pairs survive as long
+      as the batch side alone is within the cap.
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        key = ["band_id", "band_hash"]
-        (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(signature_store_path)
+        batch_id = int(batch_id)
+        _overwrite_batch(batch_df, batch_id, signature_store_path)
+        store = batch_df.sparkSession.read.parquet(signature_store_path)
+        fresh = F.col("batch_id") == batch_id
+        pairs = pairs_against_bands(
+            store.filter(fresh).drop("batch_id"),
+            store.filter(~fresh).drop("batch_id"),
+            batch_df.schema["id"].dataType.simpleString(), max_bucket_size,
         )
-        store = spark.read.parquet(signature_store_path).drop("batch_id")
-        touched = store.join(batch_df.select(*key).distinct(), key)
-        sizes = touched.groupBy(*key).agg(F.count("*").alias("_n"))
-        kept = touched.join(
-            sizes.filter(F.col("_n") <= max_bucket_size).select(*key), key
-        )
-        fresh = batch_df.withColumnRenamed("id", "id_1")
-        pairs = (
-            fresh.join(kept.withColumnRenamed("id", "id_2"), key)
-            .filter(F.col("id_1") != F.col("id_2"))
-            .select(
-                F.greatest("id_1", "id_2").alias("id_1"),
-                F.least("id_1", "id_2").alias("id_2"),
-            )
-            .dropDuplicates(["id_1", "id_2"])
-        )
-        (
-            pairs.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(pairs_out_path)
-        )
+        _overwrite_batch(pairs, batch_id, pairs_out_path)
 
     return process
 

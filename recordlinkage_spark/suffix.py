@@ -207,7 +207,7 @@ def make_fingerprint_udf(span: int, window: int):
         res[(counts == 0) & ~isna] = None
         return res
 
-    # see minhash.make_band_udf: prevents duplicate evaluation on pushdown
+    # see minhash.make_text_band_udf: prevents duplicate evaluation on pushdown
     return F.pandas_udf(batch, ArrayType(LongType())).asNondeterministic()
 
 
@@ -329,7 +329,7 @@ def make_fingerprint_pos_udf(span: int, window: int):
             "poss": textfns.segments_to_series(pos, counts, isna),
         })
 
-    # see minhash.make_band_udf: prevents duplicate evaluation on pushdown
+    # see minhash.make_text_band_udf: prevents duplicate evaluation on pushdown
     return F.pandas_udf(batch, ret).asNondeterministic()
 
 

@@ -279,12 +279,11 @@ def gram_hashes_np(flat: np.ndarray, lengths: np.ndarray, n: int):
     deduped — call :func:`distinct_per_doc_np` when set semantics are
     needed); a doc with ``0 <= len <= n`` emits ONE hash folding all
     tokens from 0 (empty doc -> [0]) so short docs still index. Each gram
-    rolls rot13-xor over the caller's token hashes; the JVM shingles
-    (:func:`shingle_hashes`) xxhash64 gram strings instead, so the two
-    are not interchangeable and a pass must verify candidates against
-    shingles produced by the SAME kernel. Null docs (length 0 *and*
-    masked by the caller) are the caller's business — here len==0 emits
-    [0].
+    rolls rot13-xor over the caller's token hashes, so a pass must verify
+    candidates against shingles produced by the SAME kernel (string
+    shingles such as :func:`word_shingles` do not match these hashes).
+    Null docs (length 0 *and* masked by the caller) are the caller's
+    business — here len==0 emits [0].
 
     Returns ``(grams, counts)``: flat uint64 grams + per-doc gram counts.
     """
@@ -411,26 +410,6 @@ def word_shingles(tok_col: Column, n: int) -> Column:
         ).otherwise(F.array_distinct(grams))
 
     return bind_once(tok_col, _grams)
-
-
-def char_shingles(col: Column, n: int) -> Column:
-    """Distinct char n-grams (for short fields like urls)."""
-
-    def _grams(s: Column) -> Column:
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.length(s) - n, F.lit(0))),
-                lambda i: F.substring(s, i + 1, n),
-            )
-        )
-
-    return bind_once(col, _grams)
-
-
-def shingle_hashes(shingle_col: Column) -> Column:
-    """xxhash64 each shingle JVM-side -> array<bigint>; the Python passes
-    (MinHash/SimHash) consume hashes, never strings."""
-    return F.transform(shingle_col, lambda s: F.xxhash64(s))
 
 
 # --- language ID (n-gram/stopword heuristic) -------------------------------

@@ -107,8 +107,8 @@ def main() -> None:
         print(f"wrote {name}_{suffix}.txt ({len(text)} chars)")
 
     # dedup pipeline: capture the un-pinned stage builders' plans
-    from recordlinkage_spark.pipeline import _band_rows, _signature_frame
-    from recordlinkage_spark.minhash import bucket_pairs, exact_jaccard
+    from recordlinkage_spark.minhash import (_band_rows, _signature_frame,
+                                             bucket_pairs, exact_jaccard)
     from recordlinkage_spark.caching import pin
 
     cfg = EngineConfig(num_perm=128, lsh_bands=32, lsh_rows=4, shingle_size=3,

@@ -189,6 +189,50 @@ def test_empty_docs_excluded_from_signatures(spark):
     assert spairs == {("b", "a")}
 
 
+_NULL_ID_PASSES = {
+    "minhash_candidates": lambda df: MinHashLSH(
+        num_perm=32, bands=8, rows=4).candidate_pairs(df, "url", "text"),
+    "minhash_verified": lambda df: MinHashLSH(
+        num_perm=32, bands=8, rows=4).verified_pairs(
+            df, "url", "text", threshold=0.5),
+    "simhash": lambda df: SimHash(hamming_k=3, blocks=4).candidate_pairs(
+        df, "url", "text"),
+    "fingerprint": lambda df: FingerprintSubstring(
+        span_tokens=16, winnow_window=9).candidate_pairs(df, "url", "text"),
+}
+
+
+@pytest.mark.parametrize("run_pass", list(_NULL_ID_PASSES))
+def test_null_id_sharing_a_bucket(spark, run_pass):
+    """A null id that shares a bucket with real docs is dropped before the
+    pair expander (bucket_pairs): the real pair is still found and no pair
+    holds a null (the expander's numpy max cannot compare None with a
+    str)."""
+    text = " ".join(f"tok{i}" for i in range(120))
+    docs = spark.createDataFrame(
+        [(None, text), ("a", text), ("b", text)], "url string, text string"
+    )
+    got = {(r["id_1"], r["id_2"])
+           for r in _NULL_ID_PASSES[run_pass](docs).collect()}
+    assert got == {("b", "a")}
+
+
+def test_verified_pairs_equal_pipeline_verified_stage(corpus):
+    """MinHashLSH.verified_pairs is the pipeline's verified stage: same
+    signature frame, bucket rows, pairer and verify gather, so on the same
+    corpus and LSH settings the two collects are equal, jaccard included
+    (the differential equal-collect check of SNIPPETS.md [2])."""
+    docs, _ = corpus
+    lsh = MinHashLSH(num_perm=128, bands=32, rows=4, shingle_size=3)
+    got = lsh.verified_pairs(docs, "url", "text", threshold=0.5).collect()
+    cfg = EngineConfig(num_perm=128, lsh_bands=32, lsh_rows=4,
+                       shingle_size=3)
+    pipe = DedupPipeline(cfg, jaccard_threshold=0.5, use_substring_pass=False)
+    want = pipe.run(docs, id_col="url", text_col="text")["matches"].collect()
+    assert len(got) > 0
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 class TestIncrementalLSH:
     """candidate_pairs_against: batch-vs-store incremental LSH (the batch
     twin of streaming.foreach_batch_dedup)."""
@@ -217,17 +261,6 @@ class TestIncrementalLSH:
             if r["id_1"] in new_ids or r["id_2"] in new_ids
         }
         assert {(r["id_1"], r["id_2"]) for r in got.collect()} == want
-
-    def test_accepts_compact_band_key_store(self, spark, corpus):
-        lsh = MinHashLSH(num_perm=128, bands=32, rows=4, shingle_size=3)
-        old, new = self._split(spark, corpus)
-        full = lsh.bands_table(old, "url", "text")
-        compact = full.select(
-            "id", F.shiftright("band_hash", 32).cast("int").alias("band_key")
-        )
-        a = lsh.candidate_pairs_against(new, full, "url", "text").collect()
-        b = lsh.candidate_pairs_against(new, compact, "url", "text").collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
     def test_no_store_only_pairs(self, spark, corpus):
         lsh = MinHashLSH(num_perm=128, bands=32, rows=4, shingle_size=3)
@@ -261,10 +294,7 @@ class TestIncrementalLSH:
 
         fake_bands = spark_df([("n1", 1), ("n1", 2)], "id string, band_key int")
         lsh.bands_table = types.MethodType(
-            lambda self, df, i, t: fake_bands.select(
-                "id", (F.col("band_key").cast("long") * (2**32)).alias("band_hash")
-            ).select("id", F.lit(0).alias("band_id"), "band_hash"),
-            lsh,
+            lambda self, df, i, t: fake_bands, lsh,
         )
         got = {
             (r["id_1"], r["id_2"])

@@ -252,11 +252,12 @@ def test_segment_pairs_np_string_ids():
 
 
 def test_bucket_pair_expander_carry_and_cap():
-    """Carry-over across batch boundaries + oversize-bucket drop."""
+    """Carry-over across batch boundaries + oversize-bucket drop, over a
+    two-column key (ANN's (table_id, bucket) shape)."""
     from recordlinkage_spark.minhash import _make_bucket_pair_expander
 
     def batch(rows):
-        return pd.DataFrame(rows, columns=["id", "band_id", "band_hash"])
+        return pd.DataFrame(rows, columns=["id", "table_id", "bucket"])
 
     # bucket (0, 7) spans two batches; bucket (1, 9) is oversize (cap=3)
     batches = [
@@ -264,7 +265,8 @@ def test_bucket_pair_expander_carry_and_cap():
         batch([(3, 0, 7), (10, 1, 9), (11, 1, 9)]),
         batch([(12, 1, 9), (13, 1, 9), (20, 2, 5), (21, 2, 5)]),
     ]
-    out = pd.concat(list(_make_bucket_pair_expander(3)(iter(batches))))
+    expand = _make_bucket_pair_expander(3, ("table_id", "bucket"))
+    out = pd.concat(list(expand(iter(batches))))
     got = sorted(zip(out["id_1"], out["id_2"]))
     assert got == [(2, 1), (3, 1), (3, 2), (21, 20)]
 

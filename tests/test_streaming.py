@@ -54,7 +54,7 @@ def test_streaming_minhash_signatures(spark, stream_dir):
     )
     _run_stream(sigs, "sig_sink")
     out = spark.sql("select * from sig_sink")
-    assert out.columns == ["id", "band_id", "band_hash"]
+    assert out.columns == ["id", "band_key"]
     assert out.count() == docs.count() * 8  # 8 bands per doc
 
 
@@ -79,6 +79,46 @@ def test_foreach_batch_incremental_lsh(spark, stream_dir, tmp_path):
     pairs = spark.read.parquet(pairs_out)
     assert pairs.count() > 0  # planted exact dups collide in every band
     assert pairs.filter(F.col("id_1") <= F.col("id_2")).count() == 0
+
+
+def test_foreach_batch_pairs_equal_batch_candidates(spark, stream_dir,
+                                                   tmp_path):
+    """Over >= 3 micro-batches and an uncapped store, the union of the
+    hook's pairs equals MinHashLSH.candidate_pairs over all docs: the
+    batch of a pair's later doc emits it, through the same bucket rows
+    and the same pairer (pairs_against_bands) as the batch path."""
+    from recordlinkage_spark.minhash import MinHashLSH
+
+    _, docs = stream_dir
+    src = str(tmp_path / "in3")
+    docs.select("url", "text").repartition(3).write.parquet(src)
+    stream = (spark.readStream.schema("url string, text string")
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    sigs = streaming.streaming_minhash_signatures(
+        stream, id_col="url", num_perm=32, bands=8, rows=4
+    )
+    store = str(tmp_path / "store")
+    pairs_out = str(tmp_path / "pairs")
+    q = (
+        sigs.writeStream.foreachBatch(
+            streaming.foreach_batch_dedup(store, pairs_out,
+                                          max_bucket_size=100_000)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    q.stop()
+    assert spark.read.parquet(store).select("batch_id").distinct().count() >= 3
+    pairs = spark.read.parquet(pairs_out).select("id_1", "id_2").collect()
+    got = {(r["id_1"], r["id_2"]) for r in pairs}
+    assert len(got) == len(pairs)  # no pair emitted by two batches
+    lsh = MinHashLSH(num_perm=32, bands=8, rows=4, shingle_size=3,
+                     max_bucket_size=100_000)
+    want = {(r["id_1"], r["id_2"])
+            for r in lsh.candidate_pairs(docs, "url", "text").collect()}
+    assert want and got == want
 
 
 def test_streaming_simhash_neardup_stateful(spark, stream_dir):
@@ -214,15 +254,15 @@ def test_foreach_batch_retry_idempotent(spark, tmp_path):
     store = str(tmp_path / "store")
     pairs_out = str(tmp_path / "pairs")
     proc = streaming.foreach_batch_dedup(store, pairs_out, max_bucket_size=10)
-    schema = "id string, band_id int, band_hash long"
-    b0 = spark.createDataFrame([("a", 0, 111), ("b", 0, 111)], schema)
+    schema = "id string, band_key int"
+    b0 = spark.createDataFrame([("a", 111), ("b", 111)], schema)
     proc(b0, 0)
     proc(b0, 0)  # retry with the same batch_id
     assert spark.read.parquet(store).count() == 2  # not 4
     first = spark.read.parquet(pairs_out).select("id_1", "id_2")
     assert first.count() == 1 and first.distinct().count() == 1
     # a later batch pairs against the deduplicated store exactly once
-    b1 = spark.createDataFrame([("c", 0, 111)], schema)
+    b1 = spark.createDataFrame([("c", 111)], schema)
     proc(b1, 1)
     got = {
         (r["id_1"], r["id_2"])

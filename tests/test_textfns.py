@@ -31,11 +31,6 @@ def test_word_shingles(spark):
     assert got3 == ["solo"]
 
 
-def test_char_shingles(spark):
-    got = _one(spark, "abcd", textfns.char_shingles(F.col("text"), 3))
-    assert sorted(got) == ["abc", "bcd"]
-
-
 def test_lang_id(spark):
     lid = textfns.lang_id(textfns.tokens(F.col("text")))
     assert _one(spark, "the cat and the dog of the house", lid) == "en"
@@ -58,12 +53,6 @@ def test_doc_fingerprint_normalizes(spark):
     b = _one(spark, "hello world ", fp)
     c = _one(spark, "hello worlds", fp)
     assert a == b != c
-
-
-def test_shingle_hashes(spark):
-    sh = textfns.shingle_hashes(textfns.word_shingles(textfns.tokens(F.col("text")), 2))
-    got = _one(spark, "a b c", sh)
-    assert len(got) == 2 and all(isinstance(x, int) for x in got)
 
 
 def test_bind_once_semantics(spark):
